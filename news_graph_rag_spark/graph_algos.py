@@ -66,6 +66,7 @@ def connected_components(
     )
 
     prev_pin = None
+    pinned = False  # max_iter <= 0 runs no round: the init frame is the answer
     for i in range(max_iter):
         # pointer-halving (parent ← parent(parent)), then neighbor-min
         # re-propagation; the round's change flag is computed in the SAME

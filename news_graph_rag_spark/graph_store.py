@@ -14,21 +14,56 @@ Scale notes
 - Edge tables are (src_uid, dst_uid) pairs; multi-hop traversals are
   equi-join chains (SURVEY §2.c). Entity/source/topic dimension tables
   are small relative to chunks → broadcast them in joins.
+
+Segment commits
+---------------
+A committed table is the parquet files of one version directory plus
+the rows appended since (``GraphStore.append``, which ``ingest_articles``
+calls with each MERGE's anti-joined new rows). The store keeps that
+split per table as a ``_Tail``:
+
+- ``localized()`` checkpoints only the appends and serves
+  ``committed scan ∪ checkpointed appends``; the committed parquet is
+  already the durable copy of the rest.
+- ``save_atomic`` writes the appends as ONE new segment file into
+  ``v_<n+1>/<table>.parquet/`` and hard-links the current version's
+  files of that table into the same directory (the carry). Old and new
+  version share the carried inodes, so collecting the old directory
+  frees nothing the new one reads.
+- A table is rewritten in full — the same write with nothing carried —
+  when it has no committed base in this root's current version (fresh
+  and hand-built stores, ``__setitem__`` replacements,
+  ``detach_delete``, a foreign commit that moved the pointer), when
+  hard links fail, and once it holds ``_MAX_SEGMENTS`` segments
+  (compaction: reads stay at a bounded number of files per table).
+- The ``_COMPLETE`` marker records each table's written schema and
+  segment count as JSON. Reads of a version with such a marker pass
+  that schema (``spark.read.schema``) and skip parquet schema
+  inference, one Spark job per table; pre-marker versions and the flat
+  layout keep inference.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .localrel import local_rel
 from .schemas import EDGE_SCHEMAS, NATURAL_KEYS, NODE_SCHEMAS
 
 ALL_TABLES = {**NODE_SCHEMAS, **EDGE_SCHEMAS}
+
+# commits a table takes as appended segments before save_atomic
+# rewrites it in full: bounds the files a read of one table lists
+_MAX_SEGMENTS = 16
 
 # Node-label rendering for the LLM schema prompt (S6, chat.py:64
 # ``db.graph.schema``): table name -> Cypher-style label.
@@ -92,6 +127,27 @@ def random_uid(label: str) -> F.Column:
     return F.concat(F.lit(label), F.lit(":"), F.substring(raw, 1, 12))
 
 
+def _union(frames) -> DataFrame | None:
+    return functools.reduce(DataFrame.unionByName, frames) if frames else None
+
+
+class _Tail(NamedTuple):
+    """A table that is its committed files plus the rows appended since.
+
+    ``base`` scans the table's directory in ``root/version``, which
+    holds ``segments`` commits' segments; ``table`` is the store frame
+    equal to ``base ∪ appends``. The tail only describes the frame it
+    names: a different frame in the table's slot was put there by
+    something else and is rewritten in full."""
+
+    root: str
+    version: str
+    segments: int
+    base: DataFrame
+    appends: tuple
+    table: DataFrame
+
+
 class GraphStore:
     """Typed node/edge DataFrames + view registration + schema rendering."""
 
@@ -102,6 +158,33 @@ class GraphStore:
         # (set by ingest_articles); released once the tables
         # materialize — see localized()
         self.pending_caches: list[DataFrame] = []
+        # committed-files-plus-appends split per table (module doc)
+        self._tails: dict[str, _Tail] = {}
+
+    def _tail(self, name: str) -> _Tail | None:
+        tail = self._tails.get(name)
+        return tail if tail is not None and tail.table is self.tables.get(name) else None
+
+    def copy(self) -> "GraphStore":
+        """A new store over the same frames, tails and pending caches;
+        ``append`` on it leaves this store unchanged."""
+        out = GraphStore(self.spark, self.tables)
+        out._tails = dict(self._tails)
+        out.pending_caches = list(self.pending_caches)
+        return out
+
+    def append(self, name: str, new_rows: DataFrame) -> None:
+        """Union ``new_rows`` onto table ``name`` (the insert half of a
+        MERGE). On a table that extends committed files the rows are
+        also recorded as pending, so ``localized`` checkpoints and
+        ``save_atomic`` writes only them."""
+        table = self.tables[name].unionByName(new_rows)
+        tail = self._tail(name)
+        if tail is not None:
+            self._tails[name] = tail._replace(
+                appends=tail.appends + (new_rows,), table=table
+            )
+        self.tables[name] = table
 
     # -- construction -----------------------------------------------------
 
@@ -168,12 +251,41 @@ class GraphStore:
                     f"missing tables {missing} — torn or still being "
                     "written; refusing to serve them as empty"
                 )
-        store = cls.empty(spark)
-        for name in ALL_TABLES:
+        written = cls._written_tables(base) if versioned else {}
+        store = cls(spark)
+        for name, schema in ALL_TABLES.items():
             path = os.path.join(base, f"{name}.parquet")
-            if os.path.exists(path):
+            if name in written:
+                store._read_committed(base, name, written[name])
+            elif os.path.exists(path):
                 store.tables[name] = spark.read.parquet(path)
+            else:
+                store.tables[name] = local_rel(spark, [], schema)
         return store
+
+    @classmethod
+    def _written_tables(cls, vdir: str) -> dict:
+        """Per-table ``{"schema", "segments"}`` recorded in a version's
+        marker; empty for a marker-less version or a marker written
+        before schemas were recorded (it held only the version name)."""
+        try:
+            with open(os.path.join(vdir, cls._COMPLETE)) as f:
+                marker = json.load(f)
+        except (OSError, ValueError):
+            return {}
+        return marker.get("tables", {}) if isinstance(marker, dict) else {}
+
+    def _read_committed(self, vdir: str, name: str, written: dict) -> None:
+        """Serve table ``name`` from version dir ``vdir`` with the
+        schema its marker recorded (no inference job), as a tail that
+        the next ``save_atomic`` to this root can extend."""
+        schema = T.StructType.fromJson(written["schema"])
+        df = self.spark.read.schema(schema).parquet(
+            os.path.join(vdir, f"{name}.parquet")
+        )
+        root, version = os.path.split(os.path.realpath(vdir))
+        self.tables[name] = df
+        self._tails[name] = _Tail(root, version, written["segments"], df, (), df)
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "GraphStore":
@@ -243,7 +355,16 @@ class GraphStore:
            (load → MERGE → save in a streaming micro-batch) — versions
            are distinct directories, so there is no
            read-path/overwrite conflict and the unexecuted plan's
-           source files are never touched.
+           source files are never touched. A table that extends the
+           current version's files (its tail, see the module doc)
+           writes only its appended rows, coalesced to one segment
+           file, and hard-links the current version's files of that
+           table beside it; Spark writes the fresh directory first and
+           the links only add names, so no carried file is ever opened
+           for writing. Every other table, and any table at
+           ``_MAX_SEGMENTS`` segments or whose links fail, is rewritten
+           in full. The ``_COMPLETE`` marker records each table's
+           written schema and segment count.
         2. The version name is written to ``_CURRENT.tmp`` +
            fsync'd, then ``os.replace``d onto ``_CURRENT`` — the ONLY
            mutation readers can observe, and it is atomic (POSIX
@@ -268,9 +389,12 @@ class GraphStore:
            directory fails loudly instead of being served as empty
            tables.
         4. After the commit, this store object's tables re-point at
-           the COMMITTED files, so the load → merge → save loop can
+           the COMMITTED files (read with the recorded schemas, no
+           inference job), so the load → merge → save loop can
            reuse one store object across many commits without its lazy
-           plans dangling on a version that GC later collects.
+           plans dangling on a version that GC later collects. GC of
+           an older version only drops link counts of files the
+           newer versions carry.
         """
         current = self._current_version(root)
         n = (self._parse_seq(current) or 0) if current is not None else 0
@@ -278,12 +402,12 @@ class GraphStore:
         vdir = os.path.join(root, version)
         tmp = None
         try:
-            for name, df in self.tables.items():
-                df.write.mode("overwrite").parquet(
-                    os.path.join(vdir, f"{name}.parquet")
-                )
+            written = {
+                name: self._write_table(name, vdir, current)
+                for name in self.tables
+            }
             with open(os.path.join(vdir, self._COMPLETE), "w") as f:
-                f.write(version)
+                json.dump({"version": version, "tables": written}, f)
             # pre-publish verification: if a GC (or anything else)
             # removed part of this version while we wrote it, abort the
             # commit instead of publishing a torn directory
@@ -313,9 +437,7 @@ class GraphStore:
         # release the ingest intermediates the committed write just
         # materialized
         for name in list(self.tables):
-            path = os.path.join(vdir, f"{name}.parquet")
-            if os.path.exists(path):
-                self.tables[name] = self.spark.read.parquet(path)
+            self._read_committed(vdir, name, written[name])
         for df in self.pending_caches:
             df.unpersist()
         self.pending_caches = []
@@ -339,6 +461,43 @@ class GraphStore:
             if seq <= n - 1:  # new commit is n+1; keep n+1, n, in-flight >= n+1
                 shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
 
+    def _write_table(self, name: str, vdir: str, current: str | None) -> dict:
+        """Write table ``name`` into version dir ``vdir``; returns what
+        the marker records for it. A tail on ``current`` writes its
+        appends as one segment file and hard-links the committed files
+        beside it; anything else is a full rewrite, i.e. the same write
+        of the whole table with nothing carried."""
+        df = self.tables[name]
+        path = os.path.join(vdir, f"{name}.parquet")
+        tail = self._tail(name)
+        root = os.path.realpath(os.path.dirname(vdir))
+        rows = _union(tail.appends) if tail is not None else None
+        if (
+            tail is not None
+            and (tail.root, tail.version) == (root, current)
+            and tail.segments < _MAX_SEGMENTS
+            # every segment file must hold the schema the marker records
+            and (rows is None or rows.schema.simpleString() == df.schema.simpleString())
+        ):
+            if rows is None:
+                os.makedirs(path)
+            else:
+                rows.coalesce(1).write.mode("overwrite").parquet(path)
+            segments = tail.segments + (rows is not None)
+            try:
+                carried = os.path.join(root, current, f"{name}.parquet")
+                for entry in os.listdir(carried):
+                    # the new segment's own _SUCCESS stays; part files
+                    # carry a per-write uuid and never collide
+                    if not os.path.exists(os.path.join(path, entry)):
+                        os.link(os.path.join(carried, entry), os.path.join(path, entry))
+            except OSError:  # no hard links here, or the base is gone
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                return {"schema": df.schema.jsonValue(), "segments": segments}
+        df.write.mode("overwrite").parquet(path)
+        return {"schema": df.schema.jsonValue(), "segments": 1}
+
     def localized(self) -> "GraphStore":
         """Return a new store whose tables are eagerly localCheckpointed.
 
@@ -349,26 +508,44 @@ class GraphStore:
         ingest loops call this every N batches; production crawls
         interleave ``save_atomic()`` instead (parquet is the durable
         checkpoint — the foreachBatch streaming path already does).
+
+        A table that extends committed files checkpoints only its
+        appends and is served as ``committed scan ∪ checkpointed
+        appends`` — the committed parquet already holds the rest — and
+        keeps its tail, so the next ``save_atomic`` still writes only
+        those rows.
         """
-        checkpointed = {
-            name: df.localCheckpoint(eager=True)
-            for name, df in self.tables.items()
-        }
-        out = GraphStore(self.spark, checkpointed)
-        # record EXACTLY this generation's block-manager RDD ids so a
-        # later caller can release them once superseded
-        # (DataFrame.unpersist does NOT free localCheckpoint blocks —
-        # they belong to the checkpointed RDD, not the plan cache).
-        # The id is read off each frame's own LogicalRDD plan node —
-        # never a global persistent-RDD diff, which under a concurrent
-        # cache on the shared session would capture (and later free)
-        # someone else's only copy of their data.
         ids = []
-        for df in checkpointed.values():
+
+        def pin(df: DataFrame) -> DataFrame:
+            df = df.localCheckpoint(eager=True)
+            # record EXACTLY this generation's block-manager RDD ids so
+            # a later caller can release them once superseded
+            # (DataFrame.unpersist does NOT free localCheckpoint blocks
+            # — they belong to the checkpointed RDD, not the plan
+            # cache). The id is read off the checkpoint's own
+            # LogicalRDD plan node, never off a served union (no
+            # LogicalRDD root) and never a global persistent-RDD diff,
+            # which under a concurrent cache on the shared session
+            # would capture (and later free) someone else's only copy
+            # of their data.
             try:
                 ids.append(int(df._jdf.queryExecution().analyzed().rdd().id()))
             except Exception:
                 pass  # non-LogicalRDD plan: nothing to release later
+            return df
+
+        out = GraphStore(self.spark)
+        for name, df in self.tables.items():
+            tail = self._tail(name)
+            if tail is None:
+                out.tables[name] = pin(df)
+                continue
+            rows = _union(tail.appends)
+            appends = () if rows is None else (pin(rows),)
+            table = _union((tail.base, *appends))
+            out.tables[name] = table
+            out._tails[name] = tail._replace(appends=appends, table=table)
         out.checkpoint_rdd_ids = sorted(ids)
         for df in self.pending_caches:
             df.unpersist()

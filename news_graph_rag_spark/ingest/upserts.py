@@ -45,9 +45,14 @@ def merge_into(existing: DataFrame, updates: DataFrame, keys: list[str]) -> Data
     appended. Updates are deduped on the key first (UNWIND batches can
     repeat keys).
     """
+    return existing.unionByName(new_rows_of(existing, updates, keys))
+
+
+def new_rows_of(existing: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows MERGE inserts: ``updates`` deduped on ``keys`` (in
+    ``existing``'s column order), minus the keys ``existing`` holds."""
     updates = updates.select(*existing.columns).dropDuplicates(keys)
-    new_rows = updates.join(existing.select(*keys), keys, "left_anti")
-    return existing.unionByName(new_rows)
+    return updates.join(existing.select(*keys), keys, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -69,12 +74,16 @@ def ingest_articles(
       D5 sources+PUBLISHED · D3 authors+AUTHORED · D4 topics+HAS_TOPIC
       L5-L6 NER · D6 entities+MENTIONS
     """
-    tables = dict(store.tables)
-    spark = store.spark
-    # carry forward the input store's unreleased caches (chained
-    # ingests discard intermediate store objects) + this batch's own;
-    # unpersisted by GraphStore.localized()/save_atomic()
-    pending_caches = list(store.pending_caches)
+    # the copy carries forward the input store's unreleased caches
+    # (chained ingests discard intermediate store objects) and collects
+    # this batch's own; unpersisted by GraphStore.localized()/save_atomic()
+    out = store.copy()
+    pending_caches = out.pending_caches
+
+    def merge(table: str, updates: DataFrame, keys: list[str]) -> None:
+        # append only the anti-joined new rows: on a committed table
+        # they are all save_atomic writes (graph_store module doc)
+        out.append(table, new_rows_of(out.tables[table], updates, keys))
 
     # NOTE (round-17): a blanket fan-out (repartition to
     # defaultParallelism when the batch arrives under-partitioned) was
@@ -97,7 +106,7 @@ def ingest_articles(
         "language",
         "url",
     )
-    tables["article"] = merge_into(tables["article"], articles_new, ["uid"])
+    merge("article", articles_new, ["uid"])
 
     # ---- L1-L4: chunking, then L7 embeddings, then D2 upsert
     chunks_flat = chunk_articles(raw).withColumn(
@@ -121,13 +130,11 @@ def ingest_articles(
     chunk_rows = chunks_flat.select(
         "uid", "text", "category", "section", "position", "embedding"
     )
-    tables["chunk"] = merge_into(tables["chunk"], chunk_rows, ["uid"])
+    merge("chunk", chunk_rows, ["uid"])
     contains = chunks_flat.select(
         F.col("article_uid").alias("src_uid"), F.col("uid").alias("dst_uid")
     )
-    tables["contains"] = merge_into(
-        tables["contains"], contains, ["src_uid", "dst_uid"]
-    )
+    merge("contains", contains, ["src_uid", "dst_uid"])
 
     # ---- D5: sources + PUBLISHED (MERGE by (name,type,url), graph.py:70-80)
     sources = raw.select(
@@ -138,16 +145,14 @@ def ingest_articles(
         F.col("source_type").alias("type"),
         F.col("source_url").alias("url"),
     )
-    tables["source"] = merge_into(tables["source"], sources, ["name", "type", "url"])
+    merge("source", sources, ["name", "type", "url"])
     published = raw.select(
         content_uid(
             "Source", F.col("source_name"), F.col("source_type"), F.col("source_url")
         ).alias("src_uid"),
         content_uid("Article", F.col("url")).alias("dst_uid"),
     )
-    tables["published"] = merge_into(
-        tables["published"], published, ["src_uid", "dst_uid"]
-    )
+    merge("published", published, ["src_uid", "dst_uid"])
 
     # ---- D3: authors + AUTHORED (fallback: publisher name, crawler.py:44)
     authors = raw.select(
@@ -162,12 +167,12 @@ def ingest_articles(
     person_rows = authors.select(
         content_uid("Person", F.col("name")).alias("uid"), "name"
     )
-    tables["person"] = merge_into(tables["person"], person_rows, ["name"])
+    merge("person", person_rows, ["name"])
     authored = authors.select(
         content_uid("Person", F.col("name")).alias("src_uid"),
         content_uid("Article", F.col("article_url")).alias("dst_uid"),
     )
-    tables["authored"] = merge_into(tables["authored"], authored, ["src_uid", "dst_uid"])
+    merge("authored", authored, ["src_uid", "dst_uid"])
 
     # ---- D4: topics + HAS_TOPIC (graph.py:66-68; call site commented out
     # in the reference crawler.py:39 but part of the surface)
@@ -175,14 +180,12 @@ def ingest_articles(
         F.col("url").alias("article_url"), F.explode_outer("topics").alias("name")
     ).filter(F.col("name").isNotNull())
     topic_rows = topics.select(content_uid("Topic", F.col("name")).alias("uid"), "name")
-    tables["topic"] = merge_into(tables["topic"], topic_rows, ["name"])
+    merge("topic", topic_rows, ["name"])
     has_topic = topics.select(
         content_uid("Article", F.col("article_url")).alias("src_uid"),
         content_uid("Topic", F.col("name")).alias("dst_uid"),
     )
-    tables["has_topic"] = merge_into(
-        tables["has_topic"], has_topic, ["src_uid", "dst_uid"]
-    )
+    merge("has_topic", has_topic, ["src_uid", "dst_uid"])
 
     # ---- L5-L6 + D6: NER → entity nodes + MENTIONS edges
     if ner_model_factory is not None:
@@ -192,24 +195,20 @@ def ingest_articles(
             ents = found.filter(F.col("label") == label).select(
                 content_uid(label.title(), F.col("name")).alias("uid"), "name"
             )
-            tables[table] = merge_into(tables[table], ents, ["name"])
+            merge(table, ents, ["name"])
         mentions = found.select(
             F.col("chunk_uid").alias("src_uid"),
             content_uid(F.initcap(F.col("label")), F.col("name")).alias("dst_uid"),
             F.initcap(F.col("label")).alias("entity_label"),
         )
-        tables["mentions"] = merge_into(
-            tables["mentions"], mentions, ["src_uid", "dst_uid"]
-        )
+        merge("mentions", mentions, ["src_uid", "dst_uid"])
 
-    out = GraphStore(spark, tables)
     # the intermediates cached above (raw, chunks_flat, NER hits) feed
     # the returned LAZY tables; the consumer that materializes the
     # store releases them (GraphStore.localized() does, and so does
     # crawl_and_ingest's periodic flush) — without this hand-off every
     # ingested batch would leak three cached DataFrames for the life of
     # the session (round-7 review finding)
-    out.pending_caches = pending_caches
     return out
 
 

@@ -33,6 +33,7 @@ import datetime as _dt
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 #: fall back to createDataFrame past this many rows — a VALUES text in
 #: the hundreds of thousands of literals stops being a parser win, and
@@ -95,6 +96,16 @@ def _lit(v) -> str:
     raise TypeError(f"local_rel cannot render a literal for {type(v)!r}")
 
 
+def _has_struct(dt: DataType) -> bool:
+    if isinstance(dt, StructType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_struct(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_struct(dt.keyType) or _has_struct(dt.valueType)
+    return False
+
+
 def local_rel(spark: SparkSession, rows, schema) -> DataFrame:
     """A small driver-side relation as a constant-folded VALUES plan
     (LocalTableScan — broadcasts without a build job; see module doc).
@@ -102,9 +113,17 @@ def local_rel(spark: SparkSession, rows, schema) -> DataFrame:
     string createDataFrame takes (or a StructType, rendered to DDL;
     note VALUES columns are always nullable — don't use this where a
     not-null constraint must survive in the schema). Falls back to
-    createDataFrame for row counts past MAX_LOCAL_REL_ROWS."""
+    createDataFrame for row counts past MAX_LOCAL_REL_ROWS and for a
+    StructType with a nested struct field (its inner field names would
+    render unquoted inside the CAST type)."""
     rows = list(rows)
     if len(rows) > MAX_LOCAL_REL_ROWS:
+        return spark.createDataFrame(rows, schema)
+    if not isinstance(schema, str) and any(
+        _has_struct(f.dataType) for f in schema.fields
+    ):
+        # a nested struct renders its field names unquoted inside the
+        # CAST type (simpleString), and _lit has no struct literal
         return spark.createDataFrame(rows, schema)
     if not isinstance(schema, str):  # StructType
         # build (name, type) pairs directly — a DDL round-trip would

@@ -40,6 +40,14 @@ def test_connected_components_long_path_converges(spark):
     assert {r["component"] for r in got} == {0}
 
 
+def test_connected_components_max_iter_zero_returns_initial_parents(spark):
+    # no round runs: each node's label is min(itself, its neighbours),
+    # the initial parent frame, not a NameError on the unset pin flag
+    e = edges_df(spark, [(1, 2), (2, 3), (3, 4)])
+    got = {(r["id"], r["component"]) for r in connected_components(e, max_iter=0).collect()}
+    assert got == {(1, 1), (2, 1), (3, 2), (4, 3)}
+
+
 def test_pagerank_star_graph(spark):
     # star: 1,2,3 all point at 0; 0 points at 1
     e = edges_df(spark, [(1, 0), (2, 0), (3, 0), (0, 1)])

@@ -87,6 +87,38 @@ def test_local_rel_quotes_reserved_and_special_column_names(spark):
     assert [tuple(r) for r in got.collect()] == [(7, "tick", "comma")]
 
 
+def test_local_rel_nested_struct_with_special_field_names(spark):
+    """A nested struct's inner field names would render unquoted inside
+    the CAST type; such schemas go through createDataFrame instead."""
+    from pyspark.sql.types import (
+        ArrayType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    inner = StructType(
+        [StructField("week day", LongType()), StructField("a`b, c", StringType())]
+    )
+    st = StructType(
+        [
+            StructField("id", LongType()),
+            StructField("s", inner),
+            StructField("xs", ArrayType(inner)),
+        ]
+    )
+    rows = [(1, (7, "tick"), [(8, "x")]), (2, None, [])]
+    got = local_rel(spark, rows, st)
+    assert got.schema == spark.createDataFrame(rows, st).schema
+    assert [tuple(r) for r in got.orderBy("id").collect()] == [
+        (1, (7, "tick"), [(8, "x")]),
+        (2, None, []),
+    ]
+    first = got.filter("id = 1").select("s.`week day`", "s.`a``b, c`")
+    assert tuple(first.first()) == (7, "tick")
+
+
 def test_local_rel_adversarial_strings_round_trip(spark):
     """Property test (VERDICT r17 #7): adversarial string literals —
     quotes, backslashes, unicode, newlines, control chars — round-trip
