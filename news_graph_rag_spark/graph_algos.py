@@ -351,12 +351,12 @@ def strongly_connected_components(
     Scale: the closure relation is O(n²) pairs in the worst case — this
     is the EXACT algorithm for bounded subgraphs (entity cores, lineage
     graphs, the ≤10⁴-node condensations that graph workloads actually
-    ask exact SCC of). For billion-node graphs the scale path is the
-    FW-BW/trim decomposition (forward/backward min-label coloring,
-    recursing on color classes), whose per-round shape is the same
-    edges⋈labels shuffle join as label_propagation here — the closure
-    variant is the one whose fixed unrolling a SQL oracle can replay
-    exactly. Each doubling is one equi-join on the middle node (AQE
+    ask exact SCC of). For billion-node graphs the scale path would be
+    the FW-BW/trim decomposition (forward/backward reachability from
+    per-class pivots, recursing on the classes; not implemented here),
+    whose per-round shape is the same edges⋈labels shuffle join as
+    label_propagation — the closure variant is the one whose fixed
+    unrolling a SQL oracle can replay exactly. Each doubling is one equi-join on the middle node (AQE
     broadcasts the relation while it fits) + distinct; localCheckpoint
     keeps lineage flat across rounds.
 
@@ -635,176 +635,3 @@ def aggregate_messages(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.groupBy("id").agg(*aggs)
-
-
-def strongly_connected_components_fbtrim(
-    edges: DataFrame, max_rounds: int = 64, checkpoint: bool = True
-) -> DataFrame:
-    """Exact SCC via FORWARD-BACKWARD decomposition with trimming — the
-    billion-node alternative to ``strongly_connected_components``'s
-    reachability-doubling closure (round 13; the closure docstring and
-    SCALE.md named this path, this implements it). Same contract:
-    (id, scc_id) with scc_id = min node id in the SCC, self-loop-only
-    nodes absent (the shared node-universe caveat).
-
-    Algorithm (FW-BW-Trim — Fleischer/Hendrickson/Pinar 2000, the
-    standard data-parallel SCC; McLendon et al. add the trim step):
-    maintain a PARTITION label per unassigned node; each round, on
-    every partition in parallel:
-
-    - TRIM to fixpoint: a node with no in-edge or no out-edge inside
-      its partition is a singleton SCC (nothing can cycle through it)
-      — assign and drop. This alone consumes entire DAGs.
-    - PIVOT: the minimum node id per partition (deterministic — no
-      sampling, so results are reproducible across retries).
-    - Frontier BFS BOTH directions from the pivot, edges restricted to
-      the partition: F = reachable-from, B = reaching. F ∩ B IS the
-      pivot's SCC, and its min id is the pivot itself (the pivot is
-      the partition's global min). Assign.
-    - The survivors split into F∖B / B∖F / neither — no SCC spans two
-      of these classes, so they recurse as THREE new partitions
-      (part' = 3·part + class).
-
-    Scale shape: every step is an edges⋈labels equi-join or a groupBy
-    — the label_propagation per-round shape, no O(n²) closure relation
-    anywhere; state is one row per node + the active edge list.
-    Expected O(log n) rounds on random graphs (each pivot's F and B
-    cover constant fractions in expectation); the worst case (a chain
-    of 2-cycles) degrades to O(n) rounds, bounded by ``max_rounds``
-    (raises rather than returning partial labels). Driver work is one
-    emptiness check per BFS hop and per round — counters, never data.
-
-    Differential-tested against the Tarjan reference and the closure
-    variant on random digraphs (tests/test_graph_algos.py), including
-    the shared-ancestor/descendant counterexample that breaks
-    single-pass FW-BW min-label coloring — the per-partition pivot
-    recursion does not have that failure mode.
-    """
-    e0 = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    if checkpoint:
-        e0 = e0.localCheckpoint(eager=True)
-    state = (
-        e0.select(F.col("src").alias("id"))
-        .unionByName(e0.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("part", F.lit(0).cast("long"))
-    )
-    if checkpoint:
-        state = state.localCheckpoint(eager=True)
-    done_parts: list[DataFrame] = []
-    spark = edges.sparkSession
-
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if checkpoint else df
-
-    def _active_edges(st: DataFrame) -> DataFrame:
-        s = st.select(F.col("id").alias("src"), F.col("part"))
-        d = st.select(F.col("id").alias("dst"), F.col("part").alias("_pd"))
-        return (
-            e0.join(s, "src")
-            .join(d, "dst")
-            .filter(F.col("part") == F.col("_pd"))
-            .select("src", "dst", "part")
-        )
-
-    def _reach(ae: DataFrame, piv: DataFrame, forward: bool) -> DataFrame:
-        """(part, id) reachable from the partition pivot along (fwd) or
-        against (bwd) the partition-restricted edges."""
-        visited = _pin(piv.select("part", F.col("pid").alias("id")))
-        frontier = visited
-        a, b = ("src", "dst") if forward else ("dst", "src")
-        while True:
-            step = (
-                ae.join(
-                    frontier.select(
-                        F.col("id").alias(a), F.col("part").alias("_fp")
-                    ),
-                    on=a,
-                )
-                .filter(F.col("part") == F.col("_fp"))
-                .select("part", F.col(b).alias("id"))
-                .distinct()
-                .join(visited, ["part", "id"], "left_anti")
-            )
-            step = _pin(step)
-            if step.isEmpty():
-                return visited
-            visited = _pin(visited.unionByName(step))
-            frontier = step
-
-    for _ in range(max_rounds):
-        if state.isEmpty():
-            break
-        # TRIM to fixpoint
-        while True:
-            ae = _active_edges(state)
-            alive = (
-                ae.select(F.col("src").alias("id"))
-                .intersect(ae.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            trivial = state.join(alive, "id", "left_anti")
-            trivial = _pin(trivial)
-            if trivial.isEmpty():
-                break
-            done_parts.append(
-                trivial.select("id", F.col("id").alias("scc_id"))
-            )
-            state = _pin(state.join(trivial.select("id"), "id", "left_anti"))
-        if state.isEmpty():
-            break
-        ae = _pin(_active_edges(state))
-        piv = _pin(state.groupBy("part").agg(F.min("id").alias("pid")))
-        fset = _reach(ae, piv, forward=True)
-        bset = _reach(ae, piv, forward=False)
-        members = fset.join(bset, ["part", "id"])
-        done_parts.append(
-            _pin(members.join(piv, "part").select("id", F.col("pid").alias("scc_id")))
-        )
-        inf = fset.select("part", "id", F.lit(True).alias("_f"))
-        inb = bset.select("part", "id", F.lit(True).alias("_b"))
-        survivors = (
-            state.join(members.select("part", "id"), ["part", "id"], "left_anti")
-            .join(inf, ["part", "id"], "left")
-            .join(inb, ["part", "id"], "left")
-            .select(
-                "id",
-                "part",
-                F.when(F.col("_f").isNotNull(), F.lit(0))
-                .when(F.col("_b").isNotNull(), F.lit(1))
-                .otherwise(F.lit(2))
-                .alias("_cls"),
-            )
-        )
-        # relabel every (part, class) group by its MIN NODE ID: the
-        # obvious dense encoding part' = 3·part + class grows as
-        # 3^round and overflows int64 by round ~40 — inside the default
-        # budget, and ANSI Spark raises mid-job instead of the
-        # documented convergence error (round-13 review). Min-id labels
-        # are unique per group (groups partition the node set), stay
-        # inside the id domain at ANY round count, and cost one
-        # tiny-group aggregation + join per round.
-        relabel = survivors.groupBy("part", "_cls").agg(
-            F.min("id").alias("_newpart")
-        )
-        state = _pin(
-            survivors.join(relabel, ["part", "_cls"]).select(
-                "id", F.col("_newpart").alias("part")
-            )
-        )
-    else:
-        if not state.isEmpty():
-            raise ValueError(
-                f"fbtrim SCC did not converge in {max_rounds} rounds "
-                "(adversarial chain-of-cycles topology?); raise max_rounds"
-            )
-    out = done_parts[0] if done_parts else local_rel(
-        spark, [], "id long, scc_id long"
-    )
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out

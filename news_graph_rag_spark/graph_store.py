@@ -27,15 +27,17 @@ split per table as a ``_Tail``:
   already the durable copy of the rest.
 - ``save_atomic`` writes the appends as ONE new segment file into
   ``v_<n+1>/<table>.parquet/`` and hard-links the current version's
-  files of that table into the same directory (the carry). Old and new
-  version share the carried inodes, so collecting the old directory
-  frees nothing the new one reads.
+  files of that table into the same directory (the carry,
+  ``publish.carry``; it copies where links fail). Old and new version
+  share the carried inodes, so collecting the old directory frees
+  nothing the new one reads.
 - A table is rewritten in full — the same write with nothing carried —
   when it has no committed base in this root's current version (fresh
   and hand-built stores, ``__setitem__`` replacements,
   ``detach_delete``, a foreign commit that moved the pointer), when
-  hard links fail, and once it holds ``_MAX_SEGMENTS`` segments
-  (compaction: reads stay at a bounded number of files per table).
+  the base vanishes mid-carry, and once it holds ``_MAX_SEGMENTS``
+  segments (compaction: reads stay at a bounded number of files per
+  table).
 - The ``_COMPLETE`` marker records each table's written schema and
   segment count as JSON. Reads of a version with such a marker pass
   that schema (``spark.read.schema``) and skip parquet schema
@@ -56,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import publish
 from .localrel import local_rel
 from .schemas import EDGE_SCHEMAS, NATURAL_KEYS, NODE_SCHEMAS
 
@@ -362,9 +365,9 @@ class GraphStore:
            table beside it; Spark writes the fresh directory first and
            the links only add names, so no carried file is ever opened
            for writing. Every other table, and any table at
-           ``_MAX_SEGMENTS`` segments or whose links fail, is rewritten
-           in full. The ``_COMPLETE`` marker records each table's
-           written schema and segment count.
+           ``_MAX_SEGMENTS`` segments or whose base vanishes mid-carry,
+           is rewritten in full. The ``_COMPLETE`` marker records each
+           table's written schema and segment count.
         2. The version name is written to ``_CURRENT.tmp`` +
            fsync'd, then ``os.replace``d onto ``_CURRENT`` — the ONLY
            mutation readers can observe, and it is atomic (POSIX
@@ -485,13 +488,10 @@ class GraphStore:
                 rows.coalesce(1).write.mode("overwrite").parquet(path)
             segments = tail.segments + (rows is not None)
             try:
-                carried = os.path.join(root, current, f"{name}.parquet")
-                for entry in os.listdir(carried):
-                    # the new segment's own _SUCCESS stays; part files
-                    # carry a per-write uuid and never collide
-                    if not os.path.exists(os.path.join(path, entry)):
-                        os.link(os.path.join(carried, entry), os.path.join(path, entry))
-            except OSError:  # no hard links here, or the base is gone
+                # the new segment's own _SUCCESS stays; part files
+                # carry a per-write uuid and never collide
+                publish.carry(os.path.join(root, current, f"{name}.parquet"), path)
+            except OSError:  # the base is gone
                 shutil.rmtree(path, ignore_errors=True)
             else:
                 return {"schema": df.schema.jsonValue(), "segments": segments}

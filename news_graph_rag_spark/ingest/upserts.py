@@ -95,8 +95,12 @@ def ingest_articles(
     # input bytes, which an opaque in-memory batch does not expose
     # without running a job; under-partitioned FILE sources are
     # handled where the width is knowable (catalog.spread on scans).
-    raw = raw_articles.cache()
-    pending_caches.append(raw)
+    # one cache owner per batch: a caller that cached the batch itself
+    # (crawl_and_ingest counts it first) also releases it
+    raw = raw_articles
+    if not raw.is_cached:
+        raw = raw.cache()
+        pending_caches.append(raw)
 
     # ---- D1: articles (uid = content hash of url; utils.py:10-11 analog)
     articles_new = raw.select(

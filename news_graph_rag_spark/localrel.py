@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
@@ -41,28 +42,34 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 MAX_LOCAL_REL_ROWS = 2048
 
 
+_QUOTED = r"`(?:[^`]|``)*`"  # a backtick identifier; `` escapes a backtick
+
+
 def _split_schema(schema: str) -> "list[tuple[str, str]]":
-    """Split a DDL schema string ("a int, b array<array<bigint>>")
-    into (name, type) pairs at top-level commas."""
-    cols: list[tuple[str, str]] = []
-    depth = 0
-    cur = ""
-    for ch in schema:
-        if ch in "<(":
+    """Split a DDL schema string ("a int, b array<array<bigint>>",
+    "`a b` int, `c,d` string") into (name, type) pairs at top-level
+    commas. Quoted identifiers are read whole, so their spaces, commas
+    and brackets never split; names come back unquoted."""
+    cols, cur, depth = [], "", 0
+    for tok in re.findall(_QUOTED + r"|[^`<>(),]+|.", schema):
+        if tok in ("<", "("):
             depth += 1
-        elif ch in ">)":
+        elif tok in (">", ")"):
             depth -= 1
-        if ch == "," and depth == 0:
+        elif tok == "," and depth == 0:
             cols.append(cur.strip())
             cur = ""
-        else:
-            cur += ch
-    if cur.strip():
-        cols.append(cur.strip())
+            continue
+        cur += tok
+    cols.append(cur.strip())
     out = []
-    for c in cols:
-        name, typ = c.split(None, 1)
-        out.append((name.strip(), typ.strip()))
+    for col in filter(None, cols):
+        m = re.match(f"({_QUOTED})\\s*(.*)", col, re.S)
+        if m:
+            out.append((m.group(1)[1:-1].replace("``", "`"), m.group(2).strip()))
+        else:
+            name, typ = col.split(None, 1)
+            out.append((name, typ.strip()))
     return out
 
 

@@ -5,18 +5,21 @@ partition) degrades every later scan: file-open overhead, tiny row
 groups, no effective column-chunk compression. At 100 TB the scan cost
 difference between 128 MB files and 100 KB files is the difference
 between an IO-bound job and a metadata-bound one. ``compact_parquet``
-rewrites a directory into size-targeted files with the same atomic
-swap discipline as ``GraphStore.save_atomic``.
+rewrites a directory into size-targeted files in a staging dir and
+swaps it in with ``publish.replace``: the live dir retires, the staged
+one renames in. Between those two renames the path does not exist, so
+a reader opening it then fails; it never sees a half-written mix of
+old and new files.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
+
+from . import publish
 
 
 def parquet_bytes(path: str) -> int:
@@ -45,8 +48,7 @@ def compact_parquet(
 
     Returns the new file count (or the old one if no compaction was
     needed). The rewrite goes to a staging directory first and swaps in
-    with a rename, so concurrent readers of the old files either see
-    the old directory or the new one, never a half-written mix. A
+    (module doc), so a reader never sees a half-written mix. A
     round-robin repartition spreads rows evenly regardless of the input
     file-size distribution (no shuffle key needed — compaction must not
     change ordering guarantees, which parquet directories don't have).
@@ -58,15 +60,8 @@ def compact_parquet(
     if n_out >= n_files:
         return n_files
 
-    df = spark.read.parquet(path)
-    staging = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
-    retired = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    try:
-        df.repartition(n_out).write.mode("overwrite").parquet(staging)
-        os.rename(path, retired)
-        os.rename(staging, path)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    shutil.rmtree(retired, ignore_errors=True)
+    path = path.rstrip("/")
+    with publish.staged(path) as staging:
+        spark.read.parquet(path).repartition(n_out).write.parquet(staging)
+        publish.replace(path, staging)
     return parquet_file_count(path)

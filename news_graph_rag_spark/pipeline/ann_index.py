@@ -64,6 +64,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import publish
 from ..localrel import local_rel
 
 INDEX_FORMAT_VERSION = "ivf-int8-v2"  # v2: one file per inverted list
@@ -192,52 +193,8 @@ def _lloyd_round_int(assigned: DataFrame, dim: int) -> list[tuple]:
     return sorted(cents, key=lambda t: t[0])
 
 
-_STRANDED_SWEEP_AGE_S = 300.0
-
-
-def _recover_stranded(path: str) -> None:
-    """Crash hygiene at build start (round-7 advice): a hard kill in a
-    rebuild's two-rename window leaves NO live index at ``path`` with
-    the old copy stranded as ``*.retired-*`` (the in-process restore
-    can't run on SIGKILL), and killed builds strand ``*.staging-*``
-    dirs. Restore the newest complete retired copy if the live path is
-    missing, then age-sweep stale staging/retired siblings (same 300 s
-    gate as GraphStore.save_atomic's pointer-tmp sweep, so a build
-    actually in flight is never swept)."""
-    import time
-
-    parent, base = os.path.dirname(path) or ".", os.path.basename(path)
-    if not os.path.isdir(parent):
-        return
-    sibs = [
-        os.path.join(parent, n)
-        for n in os.listdir(parent)
-        if n.startswith(base + ".retired-") or n.startswith(base + ".staging-")
-    ]
-    if not os.path.exists(os.path.join(path, "meta.json")):
-        retired = [
-            s
-            for s in sibs
-            if ".retired-" in s and os.path.exists(os.path.join(s, "meta.json"))
-        ]
-        if retired:
-            newest = max(retired, key=os.path.getmtime)
-            try:
-                os.rename(newest, path)
-                sibs.remove(newest)
-            except OSError:
-                pass  # concurrent recovery won — live copy exists now
-    now = time.time()
-    for s in sibs:
-        try:
-            if now - _newest_mtime(s) > _STRANDED_SWEEP_AGE_S:
-                shutil.rmtree(s, ignore_errors=True)
-        except OSError:
-            continue
-
-
 def _try_claim(
-    path: str, name: str, stale_after: float = _STRANDED_SWEEP_AGE_S
+    path: str, name: str, stale_after: float = publish.SWEEP_AGE_S
 ) -> "str | None":
     """Atomic cross-process CLAIM of a non-idempotent mutation on the
     index at ``path`` (round-15 advice: two concurrent invocations of
@@ -255,7 +212,7 @@ def _try_claim(
     one retry; long-running owners keep theirs fresh with
     ``_claim_heartbeat``. A missing INDEX DIR (round-16 advice: the
     two-rename publish window of split/merge/retrain briefly has no
-    dir at ``path``) is healed by ``_recover_stranded`` and retried
+    dir at ``path``) is healed by ``publish.recover`` and retried
     instead of propagating FileNotFoundError into the caller."""
     import time
 
@@ -286,7 +243,7 @@ def _try_claim(
             # the index dir itself is absent — a concurrent
             # split/merge/retrain is inside its two-rename window (or
             # a crash stranded the old copy). Heal and retry.
-            _recover_stranded(path)
+            publish.recover(path, "meta.json")
             time.sleep(0.1)
     return None
 
@@ -363,28 +320,6 @@ class _claim_heartbeat:
         return False
 
 
-def _newest_mtime(root: str, max_depth: int = 3) -> float:
-    """Newest mtime across a shallow walk of ``root`` — the ROOT dir's
-    mtime alone goes stale the moment a long parquet write starts
-    adding part files deeper inside (round-8 review: the age gate
-    would have swept an in-flight build's staging dir mid-write).
-    Depth 3 reaches staging/assignments.parquet/part-*."""
-    newest = os.path.getmtime(root)
-    base_depth = root.rstrip(os.sep).count(os.sep)
-    for dirpath, dirnames, filenames in os.walk(root):
-        if dirpath.count(os.sep) - base_depth >= max_depth:
-            dirnames[:] = []
-            continue
-        for name in dirnames + filenames:
-            try:
-                newest = max(
-                    newest, os.path.getmtime(os.path.join(dirpath, name))
-                )
-            except OSError:
-                continue
-    return newest
-
-
 def build_and_save(
     emb_df: DataFrame,
     path: str,
@@ -409,7 +344,8 @@ def build_and_save(
     results are identical — partition pruning reads whole list
     DIRECTORIES, however many files they hold."""
     spark = emb_df.sparkSession
-    _recover_stranded(path)
+    publish.check_dest(path, "meta.json")  # never publish over a foreign dir
+    publish.recover(path, "meta.json")
     q = quantized_vectors(
         emb_df, widen_reps=widen_reps, embedding_col=embedding_col, id_col=id_col
     ).filter(F.col("nrm") > 0)
@@ -436,9 +372,7 @@ def build_and_save(
                 )
         assigned = _assign_to_centroids(q, cents)
 
-        staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-        retired = None
-        try:
+        with publish.staged(path) as staging:
             # one file per inverted list: hash-repartition on centroid_id
             # so each partitionBy directory gets exactly one writer task
             # (a search's file-listing cost then scales with nprobe, not
@@ -508,35 +442,19 @@ def build_and_save(
             }
             with open(os.path.join(staging, "meta.json"), "w") as f:
                 json.dump(meta, f)
-            # REBUILD at an existing path: the old index is retired ONLY
-            # NOW, after the full staging write — searches keep working
+            # REBUILD at an existing path: the old index is retired only
+            # now, after the full staging write — searches keep working
             # for the whole (long) build and the unprotected window is
-            # two renames, not the build. A hard kill inside that window
-            # still strands the old copy as ``*.retired-*`` (restored on
-            # in-process failure below); zero-downtime rebuilds belong
-            # on a NEW fingerprint path (ensure_index's scheme).
+            # two renames, not the build; zero-downtime rebuilds belong
+            # on a NEW fingerprint path (ensure_index's scheme). A fresh
+            # path publishes once: a concurrent builder's identical
+            # index may win.
             if os.path.exists(os.path.join(path, "meta.json")):
-                retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-                os.rename(path, retired)
-                _CENTROID_CACHE.pop(path, None)
-            try:
-                os.rename(staging, path)  # atomic publish
-            except OSError:
-                if os.path.exists(os.path.join(path, "meta.json")):
-                    pass  # concurrent builder won the race — identical index
-                else:
-                    raise
+                publish.replace(path, staging)
+            else:
+                publish.publish_once(staging, path, "meta.json")
             # never serve the previous build's cached centroids
             _CENTROID_CACHE.pop(path, None)
-            if retired is not None:
-                shutil.rmtree(retired, ignore_errors=True)
-                retired = None
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-            if retired is not None and not os.path.exists(
-                os.path.join(path, "meta.json")
-            ):
-                os.rename(retired, path)  # failed rebuild: restore old
     finally:
         q.unpersist()
     return path
@@ -563,9 +481,10 @@ def load_index(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, di
 #   vectors stop being servable the moment the tombstone lands — no
 #   rewrite on the serving path
 # - compact_tombstones          -> folds tombstones into the inverted
-#   lists offline, rewriting ONLY the affected centroid partitions with
-#   the same staged-swap discipline as maintenance.compact_parquet, then
-#   retires the tombstone table
+#   lists offline: rewrites ONLY the affected centroid partitions,
+#   hard-links the rest into a staged copy of the index that drops the
+#   tombstone table and the PQ layers, and swaps it in whole
+#   (publish.replace, the split/merge discipline)
 # ---------------------------------------------------------------------------
 
 
@@ -642,135 +561,94 @@ def delete_uids(spark: SparkSession, path: str, uids) -> int:
     return delete_vectors(spark, path, df)
 
 
-def _recover_compaction(path: str) -> None:
-    """Crash hygiene for per-list compaction (round-8 review): a hard
-    kill between a list's two renames leaves that partition directory
-    ABSENT from the assignments root with the old copy parked under
-    ``.compact-*/``. Restore any such list from its retired copy, then
-    age-sweep stale holding dirs (the staging-dir mtime gate)."""
-    import glob
-    import time
+def _carry_rest(path: str, staging: str, handled: "set[str]") -> None:
+    """Hard-link every entry of the index at ``path`` into ``staging``
+    except the ``handled`` names the caller rewrites and the PQ layers
+    (``pq_m*``: each whole-index op stages, rewrites or drops those
+    itself) — tombstones, uid maps, sentinels and claim files carry."""
+    pq = {e for e in os.listdir(path) if e.startswith("pq_m")}
+    publish.carry(path, staging, skip=handled | pq)
 
-    apath = os.path.join(path, "assignments.parquet")
-    now = time.time()
-    for hold in glob.glob(os.path.join(path, ".compact-*")):
-        for retired in glob.glob(os.path.join(hold, "retired-centroid_id=*")):
-            part_name = os.path.basename(retired)[len("retired-") :]
-            live = os.path.join(apath, part_name)
-            if not os.path.exists(live):
-                try:
-                    os.rename(retired, live)
-                except OSError:
-                    pass  # concurrent recovery won
-        try:
-            if not os.listdir(hold) or (
-                now - _newest_mtime(hold) > _STRANDED_SWEEP_AGE_S
-            ):
-                shutil.rmtree(hold, ignore_errors=True)
-        except OSError:
-            continue
+
+def _pq_layers(path: str) -> "list[str]":
+    """The published PQ layer dirs of the index at ``path``: param-keyed
+    ``pq_m{m}_ks{ks}`` dirs with a meta.json (staging, retired and
+    torn copies are not layers)."""
+    import re
+
+    return [
+        os.path.join(path, e)
+        for e in sorted(os.listdir(path))
+        if re.fullmatch(r"pq_m\d+_ks\d+", e)
+        and os.path.exists(os.path.join(path, e, "meta.json"))
+    ]
+
+
+def _drop_caches(path: str) -> None:
+    """Forget this process's cached centroids and PQ codebooks of
+    ``path`` after a whole-index swap."""
+    _CENTROID_CACHE.pop(path, None)
+    for pqd in list(_PQ_CACHE):
+        if pqd.startswith(path + os.sep):
+            _PQ_CACHE.pop(pqd, None)
 
 
 def compact_tombstones(spark: SparkSession, path: str) -> int:
     """Fold the tombstone set into the inverted lists: rewrite ONLY the
-    centroid partitions that actually contain tombstoned rows (at 100 TB
-    a forget-set touches a handful of lists, not the index). Staging
-    and retired copies live in a DOT-PREFIXED holding dir at the INDEX
-    root — never inside the partitioned assignments directory, where
-    Spark's partition inference would read them as bogus partition
-    values and a crash could leave the whole table unreadable (round-8
-    review). Per list the swap is two renames, so a reader racing the
-    swap can briefly see the list ABSENT (one empty-list probe — the
-    same bounded window build_and_save documents for whole-index
-    rebuilds); a hard kill inside the window is healed by
-    ``_recover_compaction`` on the next compaction. Search results are
+    centroid partitions that actually contain tombstoned rows, so the
+    data IO scales with the hit lists (at 100 TB a forget-set touches a
+    handful of lists, not the index). The metadata work does not: every
+    file of every other list is hard-linked into the staged copy, one
+    link per file, O(index files) per purge. The other
+    lists, and every other table, carry into a staged copy of the index
+    as hard links; the tombstone table does not carry (it is applied),
+    and neither do the PQ layers: their codes and nrm still describe
+    the purged vectors, and ``search_pq_by_id``'s delete mask is the
+    tombstone table that goes away — keeping them would resurrect the
+    deleted rows and leave their embedding-derived codes on disk after
+    a GDPR purge. The next ``ensure_pq`` retrains a layer from the
+    compacted lists. The staged index swaps in whole
+    (``publish.replace``), so no list is ever missing from a live
+    index; but between the two renames the WHOLE index is absent (a
+    racing reader fails for that window, where the old per-list swap
+    hid one list), and a kill there is healed by ``publish.recover`` on
+    the next compaction. Search results are
     identical before and after — the serve-time anti-join and the
     physical rewrite apply the same mask. Returns the number of rows
     physically removed."""
-    _recover_compaction(path)
+    publish.recover(path, "meta.json")
     ts = tombstones(spark, path)
     if ts is None:
         return 0
     apath = os.path.join(path, "assignments.parquet")
-    assignments = spark.read.parquet(apath)
     # which lists are affected? join the bounded tombstone set against
     # the assignments — result is <= n_centroids rows
-    hit = (
-        assignments.join(F.broadcast(ts), "vec_id", "left_semi")
+    hit = {
+        f"centroid_id={int(r['centroid_id'])}": int(r["_n"])
+        for r in spark.read.parquet(apath)
+        .join(F.broadcast(ts), "vec_id", "left_semi")
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("_n"))
         .collect()
-    )
-    removed = 0
-    hold = os.path.join(path, f".compact-{uuid.uuid4().hex[:8]}")
-    os.makedirs(hold, exist_ok=True)
-    try:
-        for r in hit:
-            cid, n_dead = int(r["centroid_id"]), int(r["_n"])
-            part_name = f"centroid_id={cid}"
-            part_dir = os.path.join(apath, part_name)
-            part = spark.read.parquet(part_dir)
-            n_files = max(
-                1, sum(1 for f in os.listdir(part_dir) if f.endswith(".parquet"))
-            )
-            kept = part.join(F.broadcast(ts), "vec_id", "left_anti")
-            staging = os.path.join(hold, f"staging-{part_name}")
-            retired = os.path.join(hold, f"retired-{part_name}")
-            try:
-                # keep the list's file-count shape (sharding survives)
-                kept.repartition(n_files).write.mode("overwrite").parquet(staging)
-                os.rename(part_dir, retired)
-                os.rename(staging, part_dir)
-            except BaseException:
-                try:
-                    if not os.path.exists(part_dir) and os.path.exists(retired):
-                        os.rename(retired, part_dir)  # in-process restore
-                except Exception:
-                    pass  # restore failed too (hard-kill analog):
-                    # _recover_compaction heals from the holding dir
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            shutil.rmtree(retired, ignore_errors=True)
-            removed += n_dead
-    finally:
-        # NEVER delete the holding dir while it still parks a retired
-        # copy whose live list is missing — that copy is the only
-        # surviving data for the list, and _recover_compaction needs it
-        import glob as _glob
-
-        unrecovered = [
-            rp
-            for rp in _glob.glob(os.path.join(hold, "retired-centroid_id=*"))
-            if not os.path.exists(
-                os.path.join(apath, os.path.basename(rp)[len("retired-") :])
-            )
-        ]
-        if not unrecovered:
-            shutil.rmtree(hold, ignore_errors=True)
-    # tombstones are folded in — retire the table (swap-out, then rm:
-    # a concurrent search holding the old DataFrame either read the
-    # tombstones before (mask applied twice — harmless) or sees none)
-    # a trained PQ layer still holds the purged vectors' CODES (and
-    # nrm), and search_pq_by_id's delete mask is the tombstone table
-    # that is about to retire — folding in the tombstones must
-    # invalidate the PQ layer too, or a PQ search would resurrect the
-    # deleted rows AND their embedding-derived codes would survive a
-    # GDPR purge on disk (round-13 review). The layer is a derived
-    # artifact; the next ensure_pq retrains it from the compacted
-    # lists. Removed BEFORE the tombstones retire so no window exists
-    # where stale codes are servable unmasked.
-    import glob as _g
-
-    for pqd in _g.glob(os.path.join(path, "pq_m*_ks*")):
-        if "__old_" in os.path.basename(pqd) or ".staging-" in pqd:
-            continue
-        _retire_dir(pqd)
-        _PQ_CACHE.pop(pqd, None)
-    tdir = _tombstone_dir(path)
-    retired_ts = f"{tdir}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(tdir, retired_ts)
-    shutil.rmtree(retired_ts, ignore_errors=True)
-    return int(removed)
+    }
+    with publish.staged(path) as staging:
+        sa = os.path.join(staging, "assignments.parquet")
+        for entry in os.listdir(apath):
+            part_dir = os.path.join(apath, entry)
+            if entry not in hit:
+                publish.carry(part_dir, os.path.join(sa, entry))
+                continue
+            n_files = max(1, len(_list_data_files(part_dir)))
+            # keep the list's file-count shape (sharding survives)
+            spark.read.parquet(part_dir).join(
+                F.broadcast(ts), "vec_id", "left_anti"
+            ).repartition(n_files).write.parquet(os.path.join(sa, entry))
+        _carry_rest(
+            path, staging, {"assignments.parquet", "tombstones.parquet"}
+        )
+        publish.replace(path, staging)
+    _drop_caches(path)
+    return sum(hit.values())
 
 
 # centroid tables are k-row immutable metadata keyed by an index path
@@ -1594,19 +1472,6 @@ def _pq_dir(path: str, m: int = 8, ks: int = 16) -> str:
     return os.path.join(path, f"pq_m{m}_ks{ks}")
 
 
-def _retire_dir(d: str) -> None:
-    """Swap-out-then-rm (the tombstone-retire discipline): an atomic
-    rename makes the layer vanish as a unit, so a crash mid-delete can
-    never leave meta.json alive over partially-removed data that a
-    later reader would serve as a valid layer."""
-    retired = f"{d}__old_{uuid.uuid4().hex[:8]}"
-    try:
-        os.rename(d, retired)
-    except OSError:
-        return  # already gone (concurrent retire)
-    shutil.rmtree(retired, ignore_errors=True)
-
-
 def _train_pq_into(
     spark: SparkSession,
     path: str,
@@ -1810,26 +1675,12 @@ def train_pq(spark: SparkSession, path: str, m: int = 8, ks: int = 16) -> str:
     partition pruning."""
     assignments = spark.read.parquet(os.path.join(path, "assignments.parquet"))
     dest = _pq_dir(path, m, ks)
-    staging = f"{dest}.staging-{uuid.uuid4().hex[:8]}"
-    try:
+    with publish.staged(dest) as staging:
         _train_pq_into(spark, path, assignments, m, ks, staging)
-        try:
-            os.rename(staging, dest)
-        except OSError:
-            # dest may be a TORN leftover (e.g. a kill mid-rmtree in
-            # ensure_pq's param-change path: meta.json gone, part
-            # files remaining) — without repair every later train_pq
-            # fails ENOTEMPTY forever (round-13 review; same repair
-            # discipline as catalog.stage_parquet)
-            if not os.path.exists(os.path.join(dest, "meta.json")):
-                shutil.rmtree(dest, ignore_errors=True)
-                try:
-                    os.rename(staging, dest)
-                except OSError:
-                    if not os.path.exists(os.path.join(dest, "meta.json")):
-                        raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        # a torn dest (e.g. a kill mid-delete: meta.json gone, part
+        # files remaining) is replaced, or every later train_pq would
+        # fail ENOTEMPTY forever (round-13 review)
+        publish.publish_once(staging, dest, "meta.json")
     _PQ_CACHE.pop(dest, None)
     return dest
 
@@ -1855,10 +1706,10 @@ def retrain_pq(spark: SparkSession, path: str, m: int = 8, ks: int = 16) -> str:
     the new layer builds COMPLETE in a staging dir, the old layer is
     retired by atomic swap-out (never an in-place rmtree — a crash
     mid-delete must not leave meta.json over partial codes), and the
-    new dir renames in; ``_pq_tables``'s (mtime, ino) validation makes
-    every process drop its cached codebooks on the next call. The
-    window between retire and rename is the same bounded
-    absent-layer window ``compact_tombstones`` documents per list.
+    new dir renames in (``publish.replace``); ``_pq_tables``'s (mtime,
+    ino) validation makes every process drop its cached codebooks on
+    the next call. Between the two renames the layer is briefly
+    absent, the same bounded window as every whole-index swap.
     meta.json records ``trained_over: live`` so an idempotent caller
     (the catalog entry) can tell a retrained layer from an initial
     one without re-deriving it."""
@@ -1866,8 +1717,7 @@ def retrain_pq(spark: SparkSession, path: str, m: int = 8, ks: int = 16) -> str:
         spark, path, spark.read.parquet(os.path.join(path, "assignments.parquet"))
     )
     dest = _pq_dir(path, m, ks)
-    staging = f"{dest}.staging-{uuid.uuid4().hex[:8]}"
-    try:
+    with publish.staged(dest) as staging:
         _train_pq_into(
             spark,
             path,
@@ -1877,29 +1727,12 @@ def retrain_pq(spark: SparkSession, path: str, m: int = 8, ks: int = 16) -> str:
             staging,
             extra_meta={"trained_over": "live"},
         )
-        # bounded swap loop (round-15 review): a concurrent train_pq /
-        # ensure_pq can republish dest between our retire and rename —
-        # losing that race must not leave the OTHER caller's all-rows
-        # layer standing as if the purge-retrain happened (the retrain
-        # has GDPR semantics). Retire-and-rename again; a torn no-meta
-        # leftover is rmtree'd like train_pq's repair path. Still
-        # failing after the retries → raise (staging is cleaned up,
-        # dest holds SOME complete layer, and the caller knows the
-        # retrain did NOT land).
-        for attempt in range(3):
-            if os.path.exists(dest):
-                if os.path.exists(os.path.join(dest, "meta.json")):
-                    _retire_dir(dest)
-                else:
-                    shutil.rmtree(dest, ignore_errors=True)
-            try:
-                os.rename(staging, dest)
-                break
-            except OSError:
-                if attempt == 2:
-                    raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        # a concurrent train_pq / ensure_pq that republishes dest
+        # between the retire and the rename is retired too (round-15
+        # review): its all-rows layer must not stand as if the purge
+        # retrain happened. If the swap still fails, the error says the
+        # retrain did NOT land.
+        publish.replace(dest, staging)
     _PQ_CACHE.pop(dest, None)
     return dest
 
@@ -2142,7 +1975,7 @@ def ensure_pq(
             got = json.load(f)
         need = got.get("format") != PQ_FORMAT_VERSION
         if need:
-            _retire_dir(pqd)
+            publish.retire(pqd)
             _PQ_CACHE.pop(pqd, None)
     if need:
         train_pq(spark, path, m=m, ks=ks)
@@ -2707,24 +2540,6 @@ def append_codes(
     return int(n)
 
 
-def _link_into(src: str, dst: str) -> None:
-    """Hardlink every file under ``src`` into the same relative layout
-    under ``dst`` — the metadata-only way to carry an index's
-    UNTOUCHED partitions into a staged rebuild (split_list): O(#files)
-    link syscalls for the whole index, real IO only for what actually
-    changes. Falls back to copy across filesystems."""
-    for dirpath, _dirnames, filenames in os.walk(src):
-        rel = os.path.relpath(dirpath, src)
-        out = dst if rel == "." else os.path.join(dst, rel)
-        os.makedirs(out, exist_ok=True)
-        for name in filenames:
-            s, d = os.path.join(dirpath, name), os.path.join(out, name)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-
-
 def split_list(
     spark: SparkSession,
     path: str,
@@ -2761,13 +2576,13 @@ def split_list(
     (metadata-only; at 100 TB the split costs IO proportional to the
     split list, never the index) — then the old dir retires and the
     staging dir renames in atomically. A hard kill in the two-rename
-    window is healed by ``_recover_stranded`` (newest retired copy
+    window is healed by ``publish.recover`` (newest retired copy
     restored), and (mtime, ino) validation drops every process's
     cached centroids and codebooks. meta.json records the split under
     ``split_history``.
 
     Returns the new child's centroid_id."""
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     cid = int(centroid_id)
     cent_rows = _centroid_rows(spark, path)
     by_id = {r[0]: r for r in cent_rows}
@@ -2807,111 +2622,75 @@ def split_list(
 
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     try:
-        os.makedirs(staging)
-        # ---- int8 tier: carry untouched lists, rewrite the split one
-        sa = os.path.join(staging, "assignments.parquet")
-        os.makedirs(sa)
-        for entry in os.listdir(apath):
-            p = os.path.join(apath, entry)
-            if os.path.isdir(p) and entry != f"centroid_id={cid}":
-                _link_into(p, os.path.join(sa, entry))
-        moved.write.mode("append").partitionBy("centroid_id").parquet(sa)
-        # ---- centroid table: parent replaced by its two children
-        new_cents = sorted(
-            [r for k, r in by_id.items() if k != cid] + real_children,
-            key=lambda t: t[0],
-        )
-        local_rel(
-            spark, new_cents, "centroid_id int, c8 array<int>, cnrm bigint"
-        ).coalesce(1).write.parquet(os.path.join(staging, "centroids.parquet"))
-        # ---- PQ tiers: inherited codebook, split rows re-encoded
-        import glob as _glob
-
-        for pqd in sorted(_glob.glob(os.path.join(path, "pq_m*_ks*"))):
-            base = os.path.basename(pqd)
-            if "__old_" in base or ".staging-" in base:
-                continue
-            if not os.path.exists(os.path.join(pqd, "meta.json")):
-                continue
-            pmeta, cb = _pq_tables(spark, pqd)
-            pm, psub = int(pmeta["m"]), int(pmeta["subd"])
-            spq = os.path.join(staging, base)
-            os.makedirs(spq)
-            # codebook: parent's rows inherited by BOTH children (child
-            # A keeps the parent's id; child B duplicates under its own)
-            cb_rows = [
-                (c, s, k, e) for (c, s, k), e in sorted(cb.items())
-            ] + [
-                (new_cid, s, k, e)
-                for (c, s, k), e in sorted(cb.items())
-                if c == cid
-            ]
-            cb_df = local_rel(
-                spark, cb_rows, "centroid_id int, sub int, code int, e array<int>"
+        with publish.staged(path) as staging:
+            # ---- int8 tier: carry untouched lists, rewrite the split one
+            sa = os.path.join(staging, "assignments.parquet")
+            # list dirs only: the append below writes its own _SUCCESS,
+            # which must not write through a link into the live index
+            for entry in os.listdir(apath):
+                if entry.startswith("centroid_id=") and entry != f"centroid_id={cid}":
+                    publish.carry(os.path.join(apath, entry), os.path.join(sa, entry))
+            moved.write.mode("append").partitionBy("centroid_id").parquet(sa)
+            # ---- centroid table: parent replaced by its two children
+            new_cents = sorted(
+                [r for k, r in by_id.items() if k != cid] + real_children,
+                key=lambda t: t[0],
             )
-            cb_df.coalesce(1).write.parquet(os.path.join(spq, "codebook.parquet"))
-            # codes: untouched lists linked, split rows re-encoded
-            # against their NEW centroid with the inherited codebook
-            cpath = os.path.join(pqd, "codes.parquet")
-            sc = os.path.join(spq, "codes.parquet")
-            os.makedirs(sc)
-            for entry in os.listdir(cpath):
-                p = os.path.join(cpath, entry)
-                if os.path.isdir(p) and entry != f"centroid_id={cid}":
-                    _link_into(p, os.path.join(sc, entry))
-            cents_df = local_rel(
-                spark,
-                [(c, c8) for c, c8, _ in real_children],
-                "centroid_id int, c8 array<int>",
+            local_rel(
+                spark, new_cents, "centroid_id int, c8 array<int>, cnrm bigint"
+            ).coalesce(1).write.parquet(os.path.join(staging, "centroids.parquet"))
+            # ---- PQ tiers: inherited codebook, split rows re-encoded
+            for pqd in _pq_layers(path):
+                pmeta, cb = _pq_tables(spark, pqd)
+                pm, psub = int(pmeta["m"]), int(pmeta["subd"])
+                spq = os.path.join(staging, os.path.basename(pqd))
+                # codebook: parent's rows inherited by BOTH children
+                # (child A keeps the parent's id; child B duplicates
+                # under its own)
+                cb_rows = [
+                    (c, s, k, e) for (c, s, k), e in sorted(cb.items())
+                ] + [
+                    (new_cid, s, k, e)
+                    for (c, s, k), e in sorted(cb.items())
+                    if c == cid
+                ]
+                cb_df = local_rel(
+                    spark, cb_rows, "centroid_id int, sub int, code int, e array<int>"
+                )
+                cb_df.coalesce(1).write.parquet(os.path.join(spq, "codebook.parquet"))
+                # codes: untouched lists linked, split rows re-encoded
+                # against their NEW centroid with the inherited codebook
+                cpath = os.path.join(pqd, "codes.parquet")
+                sc = os.path.join(spq, "codes.parquet")
+                for entry in os.listdir(cpath):
+                    if entry.startswith("centroid_id=") and entry != f"centroid_id={cid}":
+                        publish.carry(os.path.join(cpath, entry), os.path.join(sc, entry))
+                cents_df = local_rel(
+                    spark,
+                    [(c, c8) for c, c8, _ in real_children],
+                    "centroid_id int, c8 array<int>",
+                )
+                _encode_rows(moved, cents_df, cb_df, pm, psub).select(
+                    "vec_id", "nrm", "codes", "centroid_id"
+                ).write.mode("append").partitionBy("centroid_id").parquet(sc)
+                pm_meta = dict(pmeta)
+                pm_meta.setdefault("split_history", []).append(cid)
+                with open(os.path.join(spq, "meta.json"), "w") as f:
+                    json.dump(pm_meta, f)
+            # ---- everything else (tombstones, uid maps, sentinels) carries
+            _carry_rest(
+                path, staging, {"assignments.parquet", "centroids.parquet", "meta.json"}
             )
-            _encode_rows(moved, cents_df, cb_df, pm, psub).select(
-                "vec_id", "nrm", "codes", "centroid_id"
-            ).write.mode("append").partitionBy("centroid_id").parquet(sc)
-            pm_meta = dict(pmeta)
-            pm_meta.setdefault("split_history", []).append(cid)
-            with open(os.path.join(spq, "meta.json"), "w") as f:
-                json.dump(pm_meta, f)
-        # ---- everything else (tombstones, uid maps, sentinels) carries
-        handled = {"assignments.parquet", "centroids.parquet", "meta.json"}
-        for entry in os.listdir(path):
-            if (
-                entry in handled
-                or entry.startswith("pq_m")
-                or ".staging-" in entry
-                or ".retired-" in entry
-                or entry.startswith(".compact-")
-            ):
-                continue
-            p = os.path.join(path, entry)
-            if os.path.isdir(p):
-                _link_into(p, os.path.join(staging, entry))
-            else:
-                try:
-                    os.link(p, os.path.join(staging, entry))
-                except OSError:
-                    shutil.copy2(p, os.path.join(staging, entry))
-        meta = dict(meta)
-        meta.setdefault("split_history", []).append(cid)
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(meta, f)
-        # ---- atomic publish (the retrain_pq discipline at index level)
-        retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-        os.rename(path, retired)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            os.rename(retired, path)  # restore; staging swept below
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
+            meta = dict(meta)
+            meta.setdefault("split_history", []).append(cid)
+            with open(os.path.join(staging, "meta.json"), "w") as f:
+                json.dump(meta, f)
+            # ---- atomic publish (the retrain_pq discipline at index level)
+            publish.replace(path, staging)
     finally:
         rows.unpersist()  # release the list's checkpoint blocks
-        shutil.rmtree(staging, ignore_errors=True)
-        _CENTROID_CACHE.pop(path, None)
-        for pqd in list(_PQ_CACHE):
-            if pqd.startswith(path + os.sep):
-                _PQ_CACHE.pop(pqd, None)
+        _drop_caches(path)
     return new_cid
 
 
@@ -2973,13 +2752,13 @@ def merge_lists(
       ``retrain_pq`` remains the slow-cadence model refresh);
     - publish is the split's hardlink-staged whole-index atomic swap:
       untouched lists carry as hardlinks, only the two merged lists'
-      data rewrites, ``_recover_stranded`` heals the two-rename
+      data rewrites, ``publish.recover`` heals the two-rename
       window, and every process's centroid/codebook caches invalidate
       via (mtime, ino). meta.json records the merge under
       ``merge_history``.
 
     Returns the surviving centroid_id."""
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     a, b = int(cid_a), int(cid_b)
     if a == b:
         raise ValueError("merge_lists needs two distinct centroid ids")
@@ -3014,105 +2793,66 @@ def merge_lists(
 
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
         try:
-            os.makedirs(staging)
-            sa = os.path.join(staging, "assignments.parquet")
-            os.makedirs(sa)
-            gone = {f"centroid_id={keep}", f"centroid_id={drop}"}
-            for entry in os.listdir(apath):
-                p = os.path.join(apath, entry)
-                if os.path.isdir(p) and entry not in gone:
-                    _link_into(p, os.path.join(sa, entry))
-            merged.write.mode("append").partitionBy("centroid_id").parquet(sa)
-            new_cents = sorted(
-                [r for k, r in by_id.items() if k not in (keep, drop)]
-                + [(keep, c8, cnrm)],
-                key=lambda t: t[0],
-            )
-            local_rel(
-                spark, new_cents, "centroid_id int, c8 array<int>, cnrm bigint"
-            ).coalesce(1).write.parquet(
-                os.path.join(staging, "centroids.parquet")
-            )
-            import glob as _glob
-
-            for pqd in sorted(_glob.glob(os.path.join(path, "pq_m*_ks*"))):
-                base = os.path.basename(pqd)
-                if "__old_" in base or ".staging-" in base:
-                    continue
-                if not os.path.exists(os.path.join(pqd, "meta.json")):
-                    continue
-                pmeta, cb = _pq_tables(spark, pqd)
-                pm, psub = int(pmeta["m"]), int(pmeta["subd"])
-                spq = os.path.join(staging, base)
-                os.makedirs(spq)
-                # the surviving list's codebook carries; the absorbed
-                # list's entries retire with its id
-                cb_rows = [
-                    (c, s, k, e)
-                    for (c, s, k), e in sorted(cb.items())
-                    if c != drop
-                ]
-                cb_df = local_rel(
-                    spark, cb_rows, "centroid_id int, sub int, code int, e array<int>"
+            with publish.staged(path) as staging:
+                sa = os.path.join(staging, "assignments.parquet")
+                gone = {f"centroid_id={keep}", f"centroid_id={drop}"}
+                for entry in os.listdir(apath):
+                    if entry.startswith("centroid_id=") and entry not in gone:
+                        publish.carry(os.path.join(apath, entry), os.path.join(sa, entry))
+                merged.write.mode("append").partitionBy("centroid_id").parquet(sa)
+                new_cents = sorted(
+                    [r for k, r in by_id.items() if k not in (keep, drop)]
+                    + [(keep, c8, cnrm)],
+                    key=lambda t: t[0],
                 )
-                cb_df.coalesce(1).write.parquet(
-                    os.path.join(spq, "codebook.parquet")
+                local_rel(
+                    spark, new_cents, "centroid_id int, c8 array<int>, cnrm bigint"
+                ).coalesce(1).write.parquet(
+                    os.path.join(staging, "centroids.parquet")
                 )
-                cpath = os.path.join(pqd, "codes.parquet")
-                sc = os.path.join(spq, "codes.parquet")
-                os.makedirs(sc)
-                for entry in os.listdir(cpath):
-                    p = os.path.join(cpath, entry)
-                    if os.path.isdir(p) and entry not in gone:
-                        _link_into(p, os.path.join(sc, entry))
-                cents_df = local_rel(
-                    spark, [(keep, c8)], "centroid_id int, c8 array<int>"
+                for pqd in _pq_layers(path):
+                    pmeta, cb = _pq_tables(spark, pqd)
+                    pm, psub = int(pmeta["m"]), int(pmeta["subd"])
+                    spq = os.path.join(staging, os.path.basename(pqd))
+                    # the surviving list's codebook carries; the absorbed
+                    # list's entries retire with its id
+                    cb_rows = [
+                        (c, s, k, e)
+                        for (c, s, k), e in sorted(cb.items())
+                        if c != drop
+                    ]
+                    cb_df = local_rel(
+                        spark, cb_rows, "centroid_id int, sub int, code int, e array<int>"
+                    )
+                    cb_df.coalesce(1).write.parquet(
+                        os.path.join(spq, "codebook.parquet")
+                    )
+                    cpath = os.path.join(pqd, "codes.parquet")
+                    sc = os.path.join(spq, "codes.parquet")
+                    for entry in os.listdir(cpath):
+                        if entry.startswith("centroid_id=") and entry not in gone:
+                            publish.carry(os.path.join(cpath, entry), os.path.join(sc, entry))
+                    cents_df = local_rel(
+                        spark, [(keep, c8)], "centroid_id int, c8 array<int>"
+                    )
+                    _encode_rows(merged, cents_df, cb_df, pm, psub).select(
+                        "vec_id", "nrm", "codes", "centroid_id"
+                    ).write.mode("append").partitionBy("centroid_id").parquet(sc)
+                    pm_meta = dict(pmeta)
+                    pm_meta.setdefault("merge_history", []).append([keep, drop])
+                    with open(os.path.join(spq, "meta.json"), "w") as f:
+                        json.dump(pm_meta, f)
+                _carry_rest(
+                    path, staging, {"assignments.parquet", "centroids.parquet", "meta.json"}
                 )
-                _encode_rows(merged, cents_df, cb_df, pm, psub).select(
-                    "vec_id", "nrm", "codes", "centroid_id"
-                ).write.mode("append").partitionBy("centroid_id").parquet(sc)
-                pm_meta = dict(pmeta)
-                pm_meta.setdefault("merge_history", []).append([keep, drop])
-                with open(os.path.join(spq, "meta.json"), "w") as f:
-                    json.dump(pm_meta, f)
-            handled = {"assignments.parquet", "centroids.parquet", "meta.json"}
-            for entry in os.listdir(path):
-                if (
-                    entry in handled
-                    or entry.startswith("pq_m")
-                    or ".staging-" in entry
-                    or ".retired-" in entry
-                    or entry.startswith(".compact-")
-                ):
-                    continue
-                p = os.path.join(path, entry)
-                if os.path.isdir(p):
-                    _link_into(p, os.path.join(staging, entry))
-                else:
-                    try:
-                        os.link(p, os.path.join(staging, entry))
-                    except OSError:
-                        shutil.copy2(p, os.path.join(staging, entry))
-            meta = dict(meta)
-            meta.setdefault("merge_history", []).append([keep, drop])
-            with open(os.path.join(staging, "meta.json"), "w") as f:
-                json.dump(meta, f)
-            retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-            os.rename(path, retired)
-            try:
-                os.rename(staging, path)
-            except OSError:
-                os.rename(retired, path)
-                raise
-            shutil.rmtree(retired, ignore_errors=True)
+                meta = dict(meta)
+                meta.setdefault("merge_history", []).append([keep, drop])
+                with open(os.path.join(staging, "meta.json"), "w") as f:
+                    json.dump(meta, f)
+                publish.replace(path, staging)
         finally:
-            shutil.rmtree(staging, ignore_errors=True)
-            _CENTROID_CACHE.pop(path, None)
-            for pqd in list(_PQ_CACHE):
-                if pqd.startswith(path + os.sep):
-                    _PQ_CACHE.pop(pqd, None)
+            _drop_caches(path)
     finally:
         rows.unpersist()
     return keep
@@ -3163,7 +2903,7 @@ def retrain_quantizer(
     index as a long-lived object under a changing corpus.
 
     Returns the number of centroids published."""
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
     n = int(n_centroids if n_centroids is not None else meta["n_centroids"])
@@ -3176,110 +2916,75 @@ def retrain_quantizer(
     ).select("vec_id", "q8", "nrm")
     live = live.localCheckpoint(eager=True)  # seeds + (iters+1) passes
     assigned = None
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     try:
-        seeds = live.orderBy("vec_id").limit(n).collect()
-        if not seeds:
-            raise ValueError("cannot retrain a quantizer over an empty index")
-        dim = len(seeds[0]["q8"])
-        cents = [
-            (i + 1, [int(x) for x in r["q8"]], int(r["nrm"]))
-            for i, r in enumerate(seeds)
-        ]
-        for _ in range(it):
-            cents = _lloyd_round_int(_assign_to_centroids(live, cents), dim)
-            if not cents:
-                raise ValueError(
-                    "quantizer retrain collapsed: all centroids became "
-                    "zero-norm after a Lloyd round"
-                )
-        assigned = _assign_to_centroids(live, cents).localCheckpoint(
-            eager=True  # consumed by the write + every PQ retrain
-        )
-        n_rows = assigned.count()
-
-        os.makedirs(staging)
-        assigned.repartition(len(cents), "centroid_id").write.partitionBy(
-            "centroid_id"
-        ).parquet(os.path.join(staging, "assignments.parquet"))
-        local_rel(
-            spark, cents, "centroid_id int, c8 array<int>, cnrm bigint"
-        ).coalesce(1).write.parquet(os.path.join(staging, "centroids.parquet"))
-        new_meta = dict(meta)
-        new_meta["n_centroids"] = n
-        new_meta["iters"] = it
-        new_meta.setdefault("retrain_history", []).append(
-            {"n_centroids": n, "iters": it, "rows": int(n_rows)}
-        )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(new_meta, f)
-        # every trained PQ layer retrains from scratch against the new
-        # residuals — same staged build, keyed params preserved
-        import glob as _glob
-
-        for pqd in sorted(_glob.glob(os.path.join(path, "pq_m*_ks*"))):
-            base = os.path.basename(pqd)
-            if "__old_" in base or ".staging-" in base:
-                continue
-            if not os.path.exists(os.path.join(pqd, "meta.json")):
-                continue
-            with open(os.path.join(pqd, "meta.json")) as f:
-                pmeta = json.load(f)
-            _train_pq_into(
-                spark,
-                staging,
-                assigned,
-                int(pmeta["m"]),
-                int(pmeta["ks"]),
-                os.path.join(staging, base),
-                extra_meta={"trained_over": "retrain_quantizer"},
+        with publish.staged(path) as staging:
+            seeds = live.orderBy("vec_id").limit(n).collect()
+            if not seeds:
+                raise ValueError("cannot retrain a quantizer over an empty index")
+            dim = len(seeds[0]["q8"])
+            cents = [
+                (i + 1, [int(x) for x in r["q8"]], int(r["nrm"]))
+                for i, r in enumerate(seeds)
+            ]
+            for _ in range(it):
+                cents = _lloyd_round_int(_assign_to_centroids(live, cents), dim)
+                if not cents:
+                    raise ValueError(
+                        "quantizer retrain collapsed: all centroids became "
+                        "zero-norm after a Lloyd round"
+                    )
+            assigned = _assign_to_centroids(live, cents).localCheckpoint(
+                eager=True  # consumed by the write + every PQ retrain
             )
-        # carry sentinels/uid maps; NOT tombstones (physically applied
-        # above), NOT claim files (they name old-generation mutations)
-        handled = {
-            "assignments.parquet",
-            "centroids.parquet",
-            "meta.json",
-            "tombstones.parquet",
-        }
-        for entry in os.listdir(path):
-            if (
-                entry in handled
-                or entry.startswith("pq_m")
-                or ".staging-" in entry
-                or ".retired-" in entry
-                or entry.startswith(".compact-")
-            ):
-                continue
-            p = os.path.join(path, entry)
-            if os.path.isdir(p):
-                _link_into(p, os.path.join(staging, entry))
-            else:
-                try:
-                    os.link(p, os.path.join(staging, entry))
-                except OSError:
-                    shutil.copy2(p, os.path.join(staging, entry))
-        # atomic publish (the split/merge discipline)
-        retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-        os.rename(path, retired)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            os.rename(retired, path)
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
+            n_rows = assigned.count()
+
+            assigned.repartition(len(cents), "centroid_id").write.partitionBy(
+                "centroid_id"
+            ).parquet(os.path.join(staging, "assignments.parquet"))
+            local_rel(
+                spark, cents, "centroid_id int, c8 array<int>, cnrm bigint"
+            ).coalesce(1).write.parquet(os.path.join(staging, "centroids.parquet"))
+            new_meta = dict(meta)
+            new_meta["n_centroids"] = n
+            new_meta["iters"] = it
+            new_meta.setdefault("retrain_history", []).append(
+                {"n_centroids": n, "iters": it, "rows": int(n_rows)}
+            )
+            with open(os.path.join(staging, "meta.json"), "w") as f:
+                json.dump(new_meta, f)
+            # every trained PQ layer retrains from scratch against the
+            # new residuals — same staged build, keyed params preserved
+            for pqd in _pq_layers(path):
+                with open(os.path.join(pqd, "meta.json")) as f:
+                    pmeta = json.load(f)
+                _train_pq_into(
+                    spark,
+                    staging,
+                    assigned,
+                    int(pmeta["m"]),
+                    int(pmeta["ks"]),
+                    os.path.join(staging, os.path.basename(pqd)),
+                    extra_meta={"trained_over": "retrain_quantizer"},
+                )
+            # carry sentinels/uid maps and claim files; NOT tombstones
+            # (physically applied above)
+            _carry_rest(
+                path,
+                staging,
+                {
+                    "assignments.parquet",
+                    "centroids.parquet",
+                    "meta.json",
+                    "tombstones.parquet",
+                },
+            )
+            publish.replace(path, staging)
     finally:
         live.unpersist()
         if assigned is not None:
             assigned.unpersist()
-        shutil.rmtree(staging, ignore_errors=True)
-        _CENTROID_CACHE.pop(path, None)
-        _CENTROID_CACHE.pop(staging, None)
-        for pqd in list(_PQ_CACHE):
-            if pqd.startswith(path + os.sep) or pqd.startswith(
-                staging + os.sep
-            ):
-                _PQ_CACHE.pop(pqd, None)
+        _drop_caches(path)
+        _drop_caches(staging)
     return len(cents)
 
 
@@ -3319,7 +3024,7 @@ def compact_list_files(
     HARDLINKS (metadata-only — the split/merge discipline), so the IO
     cost is proportional to the over-fragmented lists, never the
     index. Publish is the same staged whole-index atomic swap as
-    split/merge/retrain: ``_recover_stranded`` heals the two-rename
+    split/merge/retrain: ``publish.recover`` heals the two-rename
     window and (mtime, ino) validation drops every process's caches.
     meta.json records the action under ``file_compactions``.
 
@@ -3330,28 +3035,18 @@ def compact_list_files(
     Returns the number of files removed across both tiers."""
     import math
 
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     target_bytes = max(1, int(target_file_mb * (1 << 20)))
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
 
-    def tier_dirs() -> "list[str]":
-        """Partitioned data roots: the int8 tier + every PQ codes dir."""
-        import glob as _glob
-
-        out = [os.path.join(path, "assignments.parquet")]
-        for pqd in sorted(_glob.glob(os.path.join(path, "pq_m*_ks*"))):
-            base = os.path.basename(pqd)
-            if "__old_" in base or ".staging-" in base:
-                continue
-            if os.path.exists(os.path.join(pqd, "meta.json")):
-                out.append(os.path.join(pqd, "codes.parquet"))
-        return out
-
-    # plan: which (tier, list) pairs actually need a rewrite
+    # plan: which (tier, list) pairs actually need a rewrite; the
+    # partitioned data roots are the int8 tier + every PQ codes dir
     plans: "dict[str, dict[str, int]]" = {}
     removed = 0
-    for tier in tier_dirs():
+    for tier in [os.path.join(path, "assignments.parquet")] + [
+        os.path.join(pqd, "codes.parquet") for pqd in _pq_layers(path)
+    ]:
         todo: "dict[str, int]" = {}
         for entry in sorted(os.listdir(tier)):
             if not entry.startswith("centroid_id="):
@@ -3373,89 +3068,32 @@ def compact_list_files(
     if not plans:
         return 0
 
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
+    compacted_lists: "list[int]" = []
     try:
-        os.makedirs(staging)
-        compacted_lists: "list[int]" = []
-        for entry in os.listdir(path):
-            if (
-                entry == "meta.json"
-                or ".staging-" in entry
-                or ".retired-" in entry
-                or entry.startswith(".compact-")
-            ):
-                continue
-            src = os.path.join(path, entry)
-            tier_key = None
-            if src in plans:
-                tier_key = src
-            elif entry.startswith("pq_m"):
-                ck = os.path.join(src, "codes.parquet")
-                if ck in plans:
-                    tier_key = ck
-            if tier_key is None:
-                # untouched tier / table: metadata-only carry
-                if os.path.isdir(src):
-                    _link_into(src, os.path.join(staging, entry))
-                else:
-                    try:
-                        os.link(src, os.path.join(staging, entry))
-                    except OSError:
-                        shutil.copy2(src, os.path.join(staging, entry))
-                continue
-            # a tier with rewrites: link everything except the
-            # over-fragmented lists, rewrite those coalesced
-            todo = plans[tier_key]
-            rel = os.path.relpath(tier_key, path)
-            sdir = os.path.join(staging, rel)
-            os.makedirs(sdir, exist_ok=True)
-            if entry.startswith("pq_m"):
-                # carry the layer's codebook/meta siblings first
-                for sib in os.listdir(src):
-                    if sib == "codes.parquet":
-                        continue
-                    sp = os.path.join(src, sib)
-                    dp = os.path.join(staging, entry, sib)
-                    if os.path.isdir(sp):
-                        _link_into(sp, dp)
-                    else:
-                        os.makedirs(os.path.dirname(dp), exist_ok=True)
-                        try:
-                            os.link(sp, dp)
-                        except OSError:
-                            shutil.copy2(sp, dp)
-            for lst in os.listdir(tier_key):
-                lp = os.path.join(tier_key, lst)
-                if not os.path.isdir(lp):
-                    continue
-                if lst not in todo:
-                    _link_into(lp, os.path.join(sdir, lst))
-                    continue
-                spark.read.parquet(lp).coalesce(todo[lst]).write.parquet(
-                    os.path.join(sdir, lst)
-                )
-                compacted_lists.append(int(lst.split("=", 1)[1]))
-        new_meta = dict(meta)
-        new_meta.setdefault("file_compactions", []).append(
-            {
-                "lists": sorted(set(compacted_lists)),
-                "files_removed": int(removed),
-            }
-        )
-        with open(os.path.join(staging, "meta.json"), "w") as f:
-            json.dump(new_meta, f)
-        retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-        os.rename(path, retired)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            os.rename(retired, path)
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
+        with publish.staged(path) as staging:
+            # everything carries as links; then each over-fragmented
+            # list's links are dropped and the list rewritten coalesced
+            _carry_rest(path, staging, {"meta.json"})
+            for pqd in _pq_layers(path):
+                publish.carry(pqd, os.path.join(staging, os.path.basename(pqd)))
+            for tier, todo in plans.items():
+                sdir = os.path.join(staging, os.path.relpath(tier, path))
+                for lst, n_files in todo.items():
+                    shutil.rmtree(os.path.join(sdir, lst))
+                    spark.read.parquet(os.path.join(tier, lst)).coalesce(
+                        n_files
+                    ).write.parquet(os.path.join(sdir, lst))
+                    compacted_lists.append(int(lst.split("=", 1)[1]))
+            new_meta = dict(meta)
+            new_meta.setdefault("file_compactions", []).append(
+                {
+                    "lists": sorted(set(compacted_lists)),
+                    "files_removed": int(removed),
+                }
+            )
+            with open(os.path.join(staging, "meta.json"), "w") as f:
+                json.dump(new_meta, f)
+            publish.replace(path, staging)
     finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        _CENTROID_CACHE.pop(path, None)
-        for pqd in list(_PQ_CACHE):
-            if pqd.startswith(path + os.sep):
-                _PQ_CACHE.pop(pqd, None)
+        _drop_caches(path)
     return removed

@@ -157,7 +157,6 @@ def fingerprint_stage_dir(src_path: str, kind: str) -> str:
     import glob
     import hashlib
     import os
-    import shutil
     import tempfile
 
     st = os.stat(src_path)
@@ -175,101 +174,59 @@ def fingerprint_stage_dir(src_path: str, kind: str) -> str:
     # lazy DataFrame returned before a mid-session testdata regen still
     # reads the PREVIOUS staged copy at execution time, so deleting it
     # the instant a new fingerprint appears can fail (or torn-read) an
-    # in-flight plan. Same 300 s gate as save_atomic's pointer-tmp
-    # sweep: old generations are retired once no plan from this session
-    # window can still reference them.
-    import time
+    # in-flight plan. publish.sweep's age gate retires old generations
+    # once no plan from this session window can still reference them.
+    from .. import publish
 
-    now = time.time()
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"ngr_{kind}_{src_key}_*")
-    ):
-        if stale == base:
-            continue
-        try:
-            if now - os.path.getmtime(stale) > 300.0:
-                shutil.rmtree(stale, ignore_errors=True)
-        except OSError:
-            continue
+    publish.sweep(
+        stale
+        for stale in glob.glob(
+            os.path.join(tempfile.gettempdir(), f"ngr_{kind}_{src_key}_*")
+        )
+        if stale != base
+    )
     return base
 
 
 def stage_parquet(src_path: str, kind: str, write_to) -> str:
-    """Write-once fingerprint staging with an ATOMIC publish — THE one
-    implementation of the build-tmp-then-rename discipline (round-12
-    review: three near-identical staging helpers had grown, and the
-    two newer ones wrote ``mode("overwrite")`` straight into the final
-    dir after a _SUCCESS check — two concurrent cold builders, e.g.
-    bench.py and a pytest run hitting the same sf dir, could interleave
-    part-files and bless a torn directory with the survivor's
-    _SUCCESS).
+    """Write-once fingerprint staging with an atomic publish: the
+    build-tmp-then-rename discipline for fingerprint-keyed tables
+    (round-12 review: the older helpers wrote ``mode("overwrite")``
+    straight into the final dir after a _SUCCESS check — two
+    concurrent cold builders, e.g. bench.py and a pytest run hitting
+    the same sf dir, could interleave part-files and bless a torn
+    directory with the survivor's _SUCCESS). The rename and its race
+    and torn-dir handling are ``publish.publish_once``.
 
     ``write_to(tmp_dir)`` must write a complete parquet directory at
     ``tmp_dir`` (Spark ``df.write.mode("overwrite").parquet(tmp)``).
     The tmp dir is created NEXT TO the final dir (same filesystem, so
-    os.rename is atomic) with a prefix OUTSIDE fingerprint_stage_dir's
-    ``ngr_{kind}_*`` sweep glob. Losing a publish race is clean: the
-    rename fails on the winner's populated dir and the loser's tmp is
-    removed; readers only ever see a fully-built dir or none.
+    the rename is atomic) under an ``ngrtmp_`` name, OUTSIDE
+    fingerprint_stage_dir's ``ngr_{kind}_*`` sweep glob. Readers only
+    ever see a fully-built dir or none.
     """
+    import glob
     import os
-    import shutil
     import tempfile
-    import time
+
+    from .. import publish
 
     # Age-gated sweep of ngrtmp_* orphans (round-12 advice): a builder
     # killed mid-write_to (SIGKILL/OOM) leaks a full tmp parquet copy
-    # that fingerprint_stage_dir's ngr_{kind}_* glob never matches.
-    # Same 300 s gate as the generation sweep — gated on the NEWEST
-    # mtime inside the dir (ann_index._newest_mtime), not the root's:
-    # a long Spark write adds part files under tmp/_temporary/ without
-    # touching the root mtime, and a root-mtime gate would sweep a
-    # live builder's dir mid-write (the exact round-8 bug the helper
-    # exists for; round-13 review caught the same shape here).
-    from ..pipeline.ann_index import _newest_mtime
-
-    now = time.time()
-    import glob
-
-    for orphan in glob.glob(os.path.join(tempfile.gettempdir(), "ngrtmp_*")):
-        try:
-            if now - _newest_mtime(orphan) > 300.0:
-                shutil.rmtree(orphan, ignore_errors=True)
-        except OSError:
-            continue
+    # that fingerprint_stage_dir's ngr_{kind}_* glob never matches. The
+    # gate reads the NEWEST mtime inside a dir, not the root's: a long
+    # Spark write adds part files under tmp/_temporary/ without
+    # touching the root mtime (round-13 review).
+    publish.sweep(glob.glob(os.path.join(tempfile.gettempdir(), "ngrtmp_*")))
 
     dest = fingerprint_stage_dir(src_path, kind)
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        tmp = tempfile.mkdtemp(
-            prefix="ngrtmp_stage_", dir=os.path.dirname(dest)
-        )
-        try:
-            # write_to failures (disk full, Spark error) must PROPAGATE,
-            # not be read as "concurrent builder won" (round-12 advice:
-            # the old broad `except OSError` around both calls masked
-            # them and returned a nonexistent dest).
+        with publish.staged(
+            os.path.join(os.path.dirname(dest), f"ngrtmp_{kind}")
+        ) as tmp:
+            os.makedirs(tmp)
             write_to(tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            # Either a concurrent builder won (dest is complete) or dest
-            # is a TORN leftover from a pre-atomic-publish crash (exists,
-            # no _SUCCESS). Verify before trusting it: a torn dir is
-            # repaired by replacing it with our complete tmp.
-            if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-                shutil.rmtree(dest, ignore_errors=True)
-                try:
-                    os.rename(tmp, dest)
-                except OSError:
-                    # lost the repair race too — winner must be complete
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-                        raise
-            else:
-                shutil.rmtree(tmp, ignore_errors=True)
+            publish.publish_once(tmp, dest, "_SUCCESS")
     return dest
 
 

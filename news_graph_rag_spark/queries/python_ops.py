@@ -903,32 +903,28 @@ def retrieval_ppr_expand(spark: SparkSession, sf: str) -> DataFrame:
         # staged-rename publish (the ensure_index discipline, round-10
         # review): build into a private tmp dir and atomically rename
         # one COMPLETE winner into place — a concurrent builder must
-        # never overwrite files a just-returned lazy plan still reads
-        import shutil
-        import tempfile
+        # never overwrite files a just-returned lazy plan still reads.
+        # The tmp is named OUTSIDE fingerprint_stage_dir's ngr_{kind}_*
+        # sweep glob, so the stale-generation sweeper can never rmtree
+        # an in-flight build (round-10 review)
+        from .. import publish
 
-        # tmp named OUTSIDE fingerprint_stage_dir's ngr_{kind}_* sweep
-        # glob, so the stale-generation sweeper can never rmtree an
-        # in-flight build (round-10 review)
-        tmp = tempfile.mkdtemp(
-            prefix="ngrtmp_pprstore_", dir=os.path.dirname(stage)
-        )
-        built = _ppr_store_build(spark, sf)
-        built["chunk"].select("uid").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "chunk"))
-        built["mentions"].select("src_uid", "dst_uid").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "mentions"))
-        for df in built.pending_caches:
-            df.unpersist()
-        built.pending_caches = []
-        with open(os.path.join(tmp, "_STAGED"), "w") as mf:
-            mf.write("ok")
-        try:
-            os.rename(tmp, stage)
-        except OSError:  # a concurrent builder won the rename
-            shutil.rmtree(tmp, ignore_errors=True)
+        with publish.staged(
+            os.path.join(os.path.dirname(stage), "ngrtmp_pprstore")
+        ) as tmp:
+            built = _ppr_store_build(spark, sf)
+            built["chunk"].select("uid").coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(tmp, "chunk"))
+            built["mentions"].select("src_uid", "dst_uid").coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(tmp, "mentions"))
+            for df in built.pending_caches:
+                df.unpersist()
+            built.pending_caches = []
+            with open(os.path.join(tmp, "_STAGED"), "w") as mf:
+                mf.write("ok")
+            publish.publish_once(tmp, stage, "_STAGED")
     chunk = spark.read.parquet(os.path.join(stage, "chunk"))
     men = spark.read.parquet(os.path.join(stage, "mentions"))
     store = GraphStore(spark, {"chunk": chunk, "mentions": men})
@@ -1662,49 +1658,40 @@ def _stage_ordered_batches(
     # forever — fingerprint_stage_dir's sweep only globs within the
     # CURRENT kind (round-13 review). Callers name their retired kinds
     # and we age-sweep them here, excluding dirs of the live kind
-    # (whose name may share the retired prefix).
-    from ..pipeline.ann_index import _newest_mtime
+    # (whose name may share the retired prefix). The gate reads the
+    # NEWEST mtime inside a dir, never the root's: a still-running
+    # old-release builder writing batch files leaves the root stale.
+    from .. import publish
 
     for rk in retired_kinds:
-        now = time.time()
-        for stale in glob.glob(
-            os.path.join(tempfile.gettempdir(), f"ngr_{rk}_*")
-        ):
-            if os.path.basename(stale).startswith(f"ngr_{kind}_"):
-                continue
-            try:
-                # NEWEST mtime inside the dir, never the root's — a
-                # still-running old-release builder writing batch files
-                # leaves the root mtime stale (the same root-mtime trap
-                # stage_parquet's sweep fixed this round)
-                if now - _newest_mtime(stale) > 300.0:
-                    shutil.rmtree(stale, ignore_errors=True)
-            except OSError:
-                continue
+        publish.sweep(
+            stale
+            for stale in glob.glob(
+                os.path.join(tempfile.gettempdir(), f"ngr_{rk}_*")
+            )
+            if not os.path.basename(stale).startswith(f"ngr_{kind}_")
+        )
 
     # ``src_table`` names the fingerprinted source (round 16: the
     # streaming-ANN entry stages embedding batches, so its staging must
     # track embeddings.parquet, not events.parquet)
     src = fingerprint_stage_dir(os.path.join(sf, src_table), kind)
-    marker = os.path.join(src, "_STAGED")
-    if not os.path.exists(marker):
-        tmp_root = tempfile.mkdtemp(
-            prefix="ngrtmp_" + kind + "_", dir=os.path.dirname(src)
-        )
-        now = time.time()
-        for i, df in enumerate(dfs_fn()):
-            tmp_out = tempfile.mkdtemp(prefix="ngrtmp_batch_stage_")
-            df.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-            dest = os.path.join(tmp_root, f"{i:03d}.parquet")
-            shutil.copy(glob.glob(f"{tmp_out}/part-*.parquet")[0], dest)
-            os.utime(dest, (now + i * 10, now + i * 10))
-            shutil.rmtree(tmp_out, ignore_errors=True)
-        with open(os.path.join(tmp_root, "_STAGED"), "w") as mf:
-            mf.write("ok")
-        try:
-            os.rename(tmp_root, src)
-        except OSError:  # concurrent builder won
-            shutil.rmtree(tmp_root, ignore_errors=True)
+    if not os.path.exists(os.path.join(src, "_STAGED")):
+        with publish.staged(
+            os.path.join(os.path.dirname(src), f"ngrtmp_{kind}")
+        ) as tmp_root:
+            os.makedirs(tmp_root)
+            now = time.time()
+            for i, df in enumerate(dfs_fn()):
+                tmp_out = tempfile.mkdtemp(prefix="ngrtmp_batch_stage_")
+                df.coalesce(1).write.mode("overwrite").parquet(tmp_out)
+                dest = os.path.join(tmp_root, f"{i:03d}.parquet")
+                shutil.copy(glob.glob(f"{tmp_out}/part-*.parquet")[0], dest)
+                os.utime(dest, (now + i * 10, now + i * 10))
+                shutil.rmtree(tmp_out, ignore_errors=True)
+            with open(os.path.join(tmp_root, "_STAGED"), "w") as mf:
+                mf.write("ok")
+            publish.publish_once(tmp_root, src, "_STAGED")
     return src
 
 

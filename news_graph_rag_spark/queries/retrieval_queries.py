@@ -1127,16 +1127,18 @@ def _staged_token_index(spark: SparkSession, sf: str) -> str:
         # build-to-staging + ATOMIC rename (the ensure_index discipline
         # the vector half of this entry already uses — round-8 review:
         # two concurrent builders writing mode("overwrite") into the
-        # SAME final dir could bless a torn directory)
-        import uuid as _uuid
+        # SAME final dir could bless a torn directory). The staging dir
+        # is named outside fingerprint_stage_dir's ngr_{kind}_* sweep.
+        from .. import publish
 
-        staging = f"{tok_dir}.staging-{_uuid.uuid4().hex[:8]}"
         toks = docs.select(
             "doc_id",
             F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("token"),
         )
         tdf = toks.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-        try:
+        with publish.staged(
+            os.path.join(os.path.dirname(tok_dir), "ngrtmp_tokidx2")
+        ) as staging:
             (
                 toks.join(tdf, "token")
                 .select(
@@ -1152,15 +1154,7 @@ def _staged_token_index(spark: SparkSession, sf: str) -> str:
                 .partitionBy("tok_bucket")
                 .parquet(staging)
             )
-            try:
-                os.rename(staging, tok_dir)  # atomic publish
-            except OSError:
-                if not os.path.exists(os.path.join(tok_dir, "_SUCCESS")):
-                    raise  # lost the race to nothing valid
-        finally:
-            import shutil as _shutil
-
-            _shutil.rmtree(staging, ignore_errors=True)
+            publish.publish_once(staging, tok_dir, "_SUCCESS")
     return tok_dir
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load, register, spread, stage_parquet
+from .. import publish
 from ..localrel import local_rel
 from .retrieval_queries import _TOMB_PRED
 from .round12 import (
@@ -243,7 +244,6 @@ def ann_ivfpq_search_tombstoned(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _has_tombstones,
-        _retire_dir,
         delete_vectors,
         ensure_pq,
         load_index,
@@ -279,7 +279,7 @@ def ann_ivfpq_search_tombstoned(spark: SparkSession, sf: str) -> DataFrame:
         .count()
         > 0
     ):
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure_pq(
             spark, sf, m=_PQ_M, ks=_PQ_KS, variant="tombstone-demo-v1"

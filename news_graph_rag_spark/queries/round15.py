@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import publish
 from .catalog import load, register, stage_parquet
 from .round12 import _split_pts
 from .round13 import _ivfpq_oracle, _PQ_KS, _PQ_M
@@ -707,7 +708,6 @@ def ann_ivfpq_insert_search_topk(spark: SparkSession, sf: str) -> DataFrame:
         _CENTROID_CACHE,
         _claimed,
         _pq_dir,
-        _retire_dir,
         append_codes,
         assign_new,
         ensure_pq,
@@ -755,7 +755,7 @@ def ann_ivfpq_insert_search_topk(spark: SparkSession, sf: str) -> DataFrame:
     # Anything else is torn → retire + rebuild.
     n_codes, n_assign = tier_counts(path)
     if n_assign != n_codes or n_assign not in (0, expected):
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
         n_codes = n_assign = 0

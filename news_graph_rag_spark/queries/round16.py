@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import publish
 from ..localrel import local_rel
 from .catalog import load, register, stage_parquet
 from .round13 import _PQ_KS, _PQ_M
@@ -291,7 +292,6 @@ def ann_ivf_split_list_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
-        _retire_dir,
         _claimed,
         append_vectors,
         ensure_index,
@@ -318,7 +318,7 @@ def ann_ivf_split_list_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     if n_appended not in (0, expected):
         # torn append (crash inside the multi-file write): retire +
         # rebuild — the round-15 insert entry's heal, same append path
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
         assign_dir = os.path.join(path, "assignments.parquet")
@@ -437,7 +437,6 @@ def streaming_ann_ingest_search(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _claimed,
-        _retire_dir,
         ensure_pq,
         search_pq_by_id,
     )
@@ -469,7 +468,7 @@ def streaming_ann_ingest_search(spark: SparkSession, sf: str) -> DataFrame:
         # torn or duplicated stream (crash inside a micro-batch commit,
         # or a replayed epoch re-appending): retire + rebuild — the
         # checkpoint dir lives inside the index dir, so it goes too
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
         n_assign = 0
@@ -1551,7 +1550,6 @@ def ann_ivfpq_split_search_topk(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _claimed,
-        _retire_dir,
         append_codes,
         assign_new,
         ensure_pq,
@@ -1581,7 +1579,7 @@ def ann_ivfpq_split_search_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     n_codes, n_assign = tier_counts(path)
     if n_assign != n_codes or n_assign not in (0, expected):
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
         n_assign = 0

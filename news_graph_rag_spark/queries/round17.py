@@ -45,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import publish
 from ..localrel import local_rel
 from .catalog import load, register
 from .round13 import _PQ_KS, _PQ_M
@@ -71,7 +72,6 @@ def _ensure_retrained(spark: SparkSession, sf: str) -> str:
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _claimed,
-        _retire_dir,
         append_codes,
         assign_new,
         ensure_pq,
@@ -111,12 +111,12 @@ def _ensure_retrained(spark: SparkSession, sf: str) -> str:
             return path  # warm: serve directly
         # a torn retrain publish can't exist (atomic swap), so this is
         # a post-retrain append gone wrong — rebuild from scratch
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
     n_codes, n_assign = inc_counts(path)
     if n_assign != n_codes or n_assign not in (0, exp_inc):
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
 
@@ -287,7 +287,6 @@ def ann_ivfpq_compact_files_search_topk(
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _claimed,
-        _retire_dir,
         append_codes,
         assign_new,
         compact_list_files,
@@ -320,7 +319,7 @@ def ann_ivfpq_compact_files_search_topk(
 
     n_codes, n_assign = tier_counts(path)
     if n_assign != n_codes or n_assign not in (0, expected):
-        _retire_dir(path)
+        publish.retire(path)
         _CENTROID_CACHE.pop(path, None)
         path = ensure()
         n_assign = n_codes = 0
@@ -471,7 +470,7 @@ def _streamtok_oracle() -> str:
 def streaming_fulltext_ingest_search(
     spark: SparkSession, sf: str
 ) -> DataFrame:
-    from ..pipeline.ann_index import _claimed, _retire_dir
+    from ..pipeline.ann_index import _claimed
     from ..retrieval.token_index import (
         ensure_postings,
         postings,
@@ -499,7 +498,7 @@ def streaming_fulltext_ingest_search(
 
     n_in = n_streamed(path)
     if n_in not in (0, expected):
-        _retire_dir(path)  # torn or replayed epoch: rebuild
+        publish.retire(path)  # torn or replayed epoch: rebuild
         path = ensure()
         n_in = 0
 
@@ -1121,7 +1120,6 @@ def streaming_hybrid_ingest_search(
     from ..pipeline.ann_index import (
         _CENTROID_CACHE,
         _claimed,
-        _retire_dir,
         ensure_index,
         search_by_vector,
     )
@@ -1200,8 +1198,8 @@ def streaming_hybrid_ingest_search(
         # a half-streamed hybrid index serves fused rankings missing
         # (or double-counting) one signal's rows, which no single-
         # subsystem heal can see
-        _retire_dir(tok_path)
-        _retire_dir(ann_path)
+        publish.retire(tok_path)
+        publish.retire(ann_path)
         _CENTROID_CACHE.pop(ann_path, None)
         tok_path, ann_path = ensure_pair()
         state = (0, 0)

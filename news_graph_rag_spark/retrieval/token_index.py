@@ -44,14 +44,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import publish
 from ..localrel import local_rel
-
-from ..pipeline.ann_index import _link_into, _recover_stranded
 
 TOKIDX_FORMAT_VERSION = "tokidx-life-v1"
 DEFAULT_BUCKETS = 16  # == retrieval_queries._TOK_BUCKETS
@@ -86,10 +84,9 @@ def build_postings(
 ) -> str:
     """Offline build: postings partitioned by tok_bucket, committed by
     one atomic directory rename (the build_and_save discipline)."""
-    _recover_stranded(path)
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        os.makedirs(staging)
+    publish.check_dest(path, "meta.json")  # never publish over a foreign dir
+    publish.recover(path, "meta.json")
+    with publish.staged(path) as staging:
         (
             _postings_of(docs, buckets)
             .repartition(buckets, "tok_bucket")
@@ -100,13 +97,7 @@ def build_postings(
             json.dump(
                 {"format": TOKIDX_FORMAT_VERSION, "buckets": buckets}, f
             )
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if not os.path.exists(os.path.join(path, "meta.json")):
-                raise  # lost the race to nothing valid
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        publish.publish_once(staging, path, "meta.json")
     return path
 
 
@@ -179,7 +170,7 @@ def compact_doc_tombstones(spark: SparkSession, path: str) -> int:
     every other bucket carries as hardlinks; publish is the staged
     atomic whole-index swap and the tombstone table retires with the
     old generation. Returns the number of posting rows removed."""
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     ts = doc_tombstones(spark, path)
     if ts is None:
         return 0
@@ -202,16 +193,15 @@ def compact_doc_tombstones(spark: SparkSession, path: str) -> int:
         affected = {int(r["tok_bucket"]): int(r["n"]) for r in hit}
         removed = sum(affected.values())
     meta = _meta(path)
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        os.makedirs(staging)
+    with publish.staged(path) as staging:
         sp = os.path.join(staging, "postings.parquet")
         os.makedirs(sp)
         gone = {f"tok_bucket={b}" for b in affected}
+        # bucket dirs only: the append below writes its own _SUCCESS,
+        # which must not write through a link into the live index
         for entry in os.listdir(pdir):
-            p = os.path.join(pdir, entry)
-            if os.path.isdir(p) and entry not in gone:
-                _link_into(p, os.path.join(sp, entry))
+            if entry.startswith("tok_bucket=") and entry not in gone:
+                publish.carry(os.path.join(pdir, entry), os.path.join(sp, entry))
         if affected:
             (
                 scan.filter(
@@ -224,38 +214,18 @@ def compact_doc_tombstones(spark: SparkSession, path: str) -> int:
                 .parquet(sp)
             )
         # carry everything else EXCEPT the tombstone table (applied)
-        for entry in os.listdir(path):
-            if (
-                entry
-                in {"postings.parquet", "meta.json", "doc_tombstones.parquet"}
-                or ".staging-" in entry
-                or ".retired-" in entry
-            ):
-                continue
-            p = os.path.join(path, entry)
-            if os.path.isdir(p):
-                _link_into(p, os.path.join(staging, entry))
-            else:
-                try:
-                    os.link(p, os.path.join(staging, entry))
-                except OSError:
-                    shutil.copy2(p, os.path.join(staging, entry))
+        publish.carry(
+            path,
+            staging,
+            skip={"postings.parquet", "meta.json", "doc_tombstones.parquet"},
+        )
         new_meta = dict(meta)
         new_meta.setdefault("purge_history", []).append(
             {"rows_removed": int(removed)}
         )
         with open(os.path.join(staging, "meta.json"), "w") as f:
             json.dump(new_meta, f)
-        retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-        os.rename(path, retired)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            os.rename(retired, path)
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        publish.replace(path, staging)
     return int(removed)
 
 
@@ -281,7 +251,7 @@ def compact_bucket_files(
     never changes row content). Returns the number of files removed."""
     import math
 
-    _recover_stranded(path)
+    publish.recover(path, "meta.json")
     target_bytes = max(1, int(target_file_mb * (1 << 20)))
     pdir = os.path.join(path, "postings.parquet")
     todo: "dict[str, int]" = {}
@@ -310,36 +280,16 @@ def compact_bucket_files(
         return 0
 
     meta = _meta(path)
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        os.makedirs(staging)
+    with publish.staged(path) as staging:
+        # everything carries as links; then each over-fragmented
+        # bucket's links are dropped and the bucket rewritten coalesced
+        publish.carry(path, staging, skip={"meta.json"})
         sp = os.path.join(staging, "postings.parquet")
-        os.makedirs(sp)
-        for entry in os.listdir(pdir):
-            p = os.path.join(pdir, entry)
-            if not os.path.isdir(p):
-                continue
-            if entry not in todo:
-                _link_into(p, os.path.join(sp, entry))
-                continue
-            spark.read.parquet(p).coalesce(todo[entry]).write.parquet(
-                os.path.join(sp, entry)
-            )
-        for entry in os.listdir(path):
-            if (
-                entry in {"postings.parquet", "meta.json"}
-                or ".staging-" in entry
-                or ".retired-" in entry
-            ):
-                continue
-            p = os.path.join(path, entry)
-            if os.path.isdir(p):
-                _link_into(p, os.path.join(staging, entry))
-            else:
-                try:
-                    os.link(p, os.path.join(staging, entry))
-                except OSError:
-                    shutil.copy2(p, os.path.join(staging, entry))
+        for entry, n_files in todo.items():
+            shutil.rmtree(os.path.join(sp, entry))
+            spark.read.parquet(os.path.join(pdir, entry)).coalesce(
+                n_files
+            ).write.parquet(os.path.join(sp, entry))
         new_meta = dict(meta)
         new_meta.setdefault("file_compactions", []).append(
             {
@@ -351,16 +301,7 @@ def compact_bucket_files(
         )
         with open(os.path.join(staging, "meta.json"), "w") as f:
             json.dump(new_meta, f)
-        retired = f"{path}.retired-{uuid.uuid4().hex[:8]}"
-        os.rename(path, retired)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            os.rename(retired, path)
-            raise
-        shutil.rmtree(retired, ignore_errors=True)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        publish.replace(path, staging)
     return int(removed)
 
 

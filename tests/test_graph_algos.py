@@ -552,75 +552,3 @@ def test_temporal_earliest_arrival_matches_python_on_random_graphs(spark):
             for r in temporal_earliest_arrival(e, sd, rounds=4).collect()
         }
         assert got == ref(triples, seeds, 4), (triples, seeds)
-
-
-def _fbtrim_dict(spark, pairs, **kw):
-    from news_graph_rag_spark.graph_algos import (
-        strongly_connected_components_fbtrim,
-    )
-
-    e = edges_df(spark, pairs)
-    return {
-        r["id"]: r["scc_id"]
-        for r in strongly_connected_components_fbtrim(e, **kw).collect()
-    }
-
-
-def test_fbtrim_scc_matches_tarjan_on_random_digraphs(spark):
-    """Round-13 (VERDICT r12 #5): the FB-trim large-graph SCC vs the
-    Tarjan reference AND the closure variant on seeded random sparse
-    digraphs — exact label-for-label match (both use min-id labels)."""
-    import random
-
-    rng = random.Random(1313)
-    for trial in range(6):
-        n = rng.randint(6, 16)
-        m = rng.randint(n, 3 * n)
-        pairs = list(
-            {(rng.randrange(n), rng.randrange(n)) for _ in range(m)}
-        )
-        pairs = [(s, d) for s, d in pairs if s != d]
-        if not pairs:
-            continue
-        want = _tarjan(pairs)
-        assert _fbtrim_dict(spark, pairs) == want, pairs
-        assert _scc_dict(spark, pairs) == want, pairs
-
-
-def test_fbtrim_scc_shared_ancestor_descendant(spark):
-    """The FW-BW min-label COLORING counterexample (see
-    test_scc_does_not_merge_shared_ancestor_descendant): per-partition
-    pivot recursion must keep 5 and 6 singleton — pinning that fbtrim
-    is the recursion variant, not the broken one-pass coloring."""
-    pairs = [(1, 5), (1, 6), (5, 2), (6, 2)]
-    assert _fbtrim_dict(spark, pairs) == {1: 1, 2: 2, 5: 5, 6: 6}
-
-
-def test_fbtrim_scc_structures(spark):
-    # two cycles + bridge; a pure DAG (trim should consume everything);
-    # a long cycle (single partition, one FB round)
-    pairs = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (3, 10)]
-    assert _fbtrim_dict(spark, pairs) == {
-        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10,
-    }
-    dag = [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5)]
-    assert _fbtrim_dict(spark, dag) == {i: i for i in range(1, 6)}
-    cyc = [(i, (i + 1) % 9) for i in range(9)]
-    assert _fbtrim_dict(spark, cyc) == {i: 0 for i in range(9)}
-
-
-def test_fbtrim_scc_round_cap_raises(spark):
-    """An exhausted round budget must raise, never return partial
-    labels (chain of 2-cycles: one SCC per FB round after the pivot's
-    partition — 1 round cannot finish 3 cycles)."""
-    import pytest as _pytest
-
-    pairs = []
-    for i in range(3):
-        a, b = 2 * i, 2 * i + 1
-        pairs += [(a, b), (b, a)]
-        if i:
-            pairs.append((a - 2, a))
-    with _pytest.raises(ValueError, match="did not converge"):
-        _fbtrim_dict(spark, pairs, max_rounds=1)
-    assert _fbtrim_dict(spark, pairs) == _tarjan(pairs)

@@ -18,6 +18,10 @@ CASES = [
     ([(True, [1.5, 2.5])], "f boolean, xs array<double>"),
     ([], "x bigint, y string"),
     ([(i, [float(i)] * 3) for i in range(5)], "n int, v array<float>"),
+    # quoted names: the space and the comma inside backticks do not
+    # split, and a doubled backtick is one literal backtick
+    ([(1, "x")], "`a b` int, `c,d` string"),
+    ([(2, [3])], "`x``y` bigint, `p<q>` array<int>"),
 ]
 
 

@@ -661,6 +661,7 @@ def test_ann_recover_stranded_retired(spark, tmp_path):
     age-swept."""
     import os
 
+    from news_graph_rag_spark import publish
     from news_graph_rag_spark.pipeline import ann_index
 
     df = _clustered_vec_table(spark, per=10, clusters=2)
@@ -679,11 +680,46 @@ def test_ann_recover_stranded_retired(spark, tmp_path):
     os.utime(stale, (old, old))
     os.utime(stranded, (old, old))
 
-    ann_index._recover_stranded(path)
+    publish.recover(path, "meta.json")
     assert os.path.exists(os.path.join(path, "meta.json"))  # restored
     assert not os.path.exists(stale)  # stale staging swept
     got = [tuple(r) for r in ann_index.search_by_id(spark, path, 0, 3, 1).collect()]
     assert got == want
+
+
+def test_index_build_refuses_a_foreign_dir(spark, tmp_path):
+    """An index path is caller-chosen (``index build <graph_root>
+    <index_path>``): building onto a non-empty directory that holds no
+    meta.json — an output folder, a graph store root — raises before
+    any work and leaves that directory intact, for the ANN and the
+    token index alike. An empty directory is simply published into."""
+    import os
+
+    from news_graph_rag_spark.pipeline import ann_index
+    from news_graph_rag_spark.retrieval import token_index
+
+    df = _clustered_vec_table(spark, per=4, clusters=1)
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    for i, build in enumerate(
+        (
+            lambda p: ann_index.build_and_save(df, p, n_centroids=1, iters=0),
+            lambda p: token_index.build_postings(docs, p),
+        )
+    ):
+        root = tmp_path / f"case{i}"
+        foreign = root / "foreign"
+        (foreign / "sub").mkdir(parents=True)
+        (foreign / "notes.txt").write_text("keep me")
+        (foreign / "sub" / "data").write_text("and me")
+        with pytest.raises(FileExistsError):
+            build(str(foreign))
+        assert (foreign / "notes.txt").read_text() == "keep me"
+        assert (foreign / "sub" / "data").read_text() == "and me"
+        assert os.listdir(root) == ["foreign"]  # no staging left either
+        empty = root / "empty"
+        empty.mkdir()
+        build(str(empty))
+        assert (empty / "meta.json").exists()
 
 
 # ---------------------------------------------------------------------------
@@ -1746,52 +1782,78 @@ def test_jpeg_decoder_spec_edge_cases():
 
 
 def test_ann_compaction_crash_recovery(spark, tmp_path, monkeypatch):
-    """Round-8 review: a hard kill between a list's two compaction
-    renames must be healable — the retired copy lives in a dot-prefixed
-    holding dir OUTSIDE the partitioned root (never read as a bogus
-    partition value), and the next compaction restores the missing
-    list before doing anything else."""
+    """Round-8 review: a hard kill at any rename of a tombstone
+    compaction must be healable. The compaction swaps a staged copy of
+    the whole index in, so no list is ever missing from a live index
+    and nothing stray lands inside the partitioned root (where Spark
+    would read it as a bogus partition value). When the kill lands
+    between the two renames — with the in-process restore dead too —
+    the next compaction restores the retired copy before anything
+    else; afterwards every list is readable and searches equal the
+    masked results from before the crash."""
     import os
+
+    import pytest as _pytest
 
     from news_graph_rag_spark.pipeline import ann_index
 
+    def listed(apath):
+        return sorted(d for d in os.listdir(apath) if d.startswith("centroid_id="))
+
     df = _clustered_vec_table(spark, dim=8, per=12, clusters=2)
-    path = str(tmp_path / "idx_crashc")
-    ann_index.build_and_save(df, path, n_centroids=2, iters=1)
-    before = [tuple(r) for r in ann_index.search_by_id(spark, path, 0, 5, 2).collect()]
-    ann_index.delete_vectors(spark, path, [before[0][1]])
-
     real_rename = os.rename
-    apath = os.path.join(path, "assignments.parquet")
+    for crash_at in (1, 2):  # the retire rename, the publish rename
+        path = str(tmp_path / f"idx_crashc{crash_at}")
+        apath = os.path.join(path, "assignments.parquet")
+        ann_index.build_and_save(df, path, n_centroids=2, iters=1)
+        before = [
+            tuple(r) for r in ann_index.search_by_id(spark, path, 0, 5, 2).collect()
+        ]
+        victim = before[0][1]
+        ann_index.delete_vectors(spark, path, [victim])
+        masked = [
+            tuple(r) for r in ann_index.search_by_id(spark, path, 0, 5, 2).collect()
+        ]
+        assert victim not in {t[1] for t in masked}
+        lists = listed(apath)
+        calls = []
 
-    def crash_after_retire(srcp, dstp):
-        # the retire rename lands, then EVERY further rename fails —
-        # including the in-process restore, like a real SIGKILL window
-        if os.path.basename(srcp).startswith("retired-centroid_id="):
-            raise RuntimeError("restore also dead")
-        real_rename(srcp, dstp)
-        if os.path.basename(dstp).startswith("retired-centroid_id="):
-            raise RuntimeError("simulated SIGKILL between the renames")
+        def crash(srcp, dstp):
+            # the crash_at-th rename and EVERY later one fail —
+            # including the in-process restore, like a real SIGKILL
+            calls.append(srcp)
+            if len(calls) >= crash_at:
+                raise RuntimeError("simulated SIGKILL at a rename")
+            real_rename(srcp, dstp)
 
-    monkeypatch.setattr(ann_index.os, "rename", crash_after_retire)
-    import pytest as _pytest
+        monkeypatch.setattr(ann_index.os, "rename", crash)
+        with _pytest.raises(RuntimeError):
+            ann_index.compact_tombstones(spark, path)
+        monkeypatch.setattr(ann_index.os, "rename", real_rename)
+        # a kill at the retire leaves the live index whole, with nothing
+        # stray inside its partitioned root; a kill at the publish
+        # leaves no live index, only the retired copy
+        if crash_at == 1:
+            assert listed(apath) == lists
+            assert all(
+                d.startswith(("centroid_id=", "_", ".")) for d in os.listdir(apath)
+            )
+        else:
+            assert not os.path.exists(path)
 
-    with _pytest.raises(RuntimeError):
-        # defeat the in-process restore too (it also uses os.rename)
-        ann_index.compact_tombstones(spark, path)
-    monkeypatch.setattr(ann_index.os, "rename", real_rename)
-
-    # the list must NOT have been left as a bogus partition INSIDE the
-    # assignments root
-    assert not any("__old" in d or "__compact" in d for d in os.listdir(apath))
-    # next compaction heals the absent list and folds the tombstone
-    removed = ann_index.compact_tombstones(spark, path)
-    assert removed == 1
-    after = [tuple(r) for r in ann_index.search_by_id(spark, path, 0, 5, 2).collect()]
-    assert before[0][1] not in {t[1] for t in after}
-    assert {t[1] for t in after} == {t[1] for t in before[1:6]} - {before[0][1]} | {
-        t[1] for t in after
-    }  # sanity: served from healed lists
+        # next compaction heals the index and folds the tombstone
+        assert ann_index.compact_tombstones(spark, path) == 1
+        assert listed(apath) == lists
+        assert sum(
+            spark.read.parquet(os.path.join(apath, d)).count() for d in lists
+        ) == df.count() - 1
+        after = [
+            tuple(r) for r in ann_index.search_by_id(spark, path, 0, 5, 2).collect()
+        ]
+        assert after == masked, crash_at
+        assert not [
+            d for d in os.listdir(str(tmp_path)) if ".retired-" in d or ".staging-" in d
+        ]
 
 
 def test_avi_mjpeg_roundtrip_gating_and_closed_form():

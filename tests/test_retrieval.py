@@ -586,7 +586,7 @@ def test_hybstream_concurrent_invocations_stream_once(spark):
     import os
     import threading
 
-    from news_graph_rag_spark.pipeline.ann_index import _retire_dir
+    from news_graph_rag_spark.publish import retire
     from news_graph_rag_spark.queries import registry
     from news_graph_rag_spark.queries.catalog import load
     from news_graph_rag_spark.queries.round17 import (
@@ -616,8 +616,8 @@ def test_hybstream_concurrent_invocations_stream_once(spark):
         subset_pred=pred_v,
     )
     # fresh pair: force the next invocations to run the stream
-    _retire_dir(tok)
-    _retire_dir(ann)
+    retire(tok)
+    retire(ann)
 
     fn = registry()["streaming_hybrid_ingest_search"].fn
     results: "dict[int, list]" = {}
