@@ -17,6 +17,10 @@ Scale notes:
   localCheckpoints to truncate the exponentially-growing plan lineage
   (iterative DataFrame jobs otherwise re-plan the whole history each
   round).
+- Per-round pins (``connected_components``, ``pagerank``, ``k_core``)
+  free the superseded generation through ``pins.release`` as soon as
+  the next one is materialized, so a run holds one generation of
+  blocks, plus whatever the returned frame reads, at any round count.
 - ``pagerank`` is fixed-iteration chained joins/aggs; contributions are
   summed via decimal casts when ``exact=True`` so results are
   independent of aggregation order (bit-identical across partitionings).
@@ -31,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .localrel import local_rel
+from .pins import release
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -43,9 +48,7 @@ def _sym(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, checkpoint_every: int = 1
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Weakly connected components: (id, component) with component =
     min node id in the component. Min-label propagation with
     pointer-halving, iterated to convergence (checked, not assumed).
@@ -65,9 +68,8 @@ def connected_components(
         .select("id", F.least(F.col("id"), F.col("nbr_min")).alias("parent"))
     )
 
-    prev_pin = None
-    pinned = False  # max_iter <= 0 runs no round: the init frame is the answer
-    for i in range(max_iter):
+    pin = None  # max_iter <= 0 runs no round: the init frame is the answer
+    for _ in range(max_iter):
         # pointer-halving (parent ← parent(parent)), then neighbor-min
         # re-propagation; the round's change flag is computed in the SAME
         # plan so the convergence check reads materialized data instead
@@ -98,17 +100,13 @@ def connected_components(
                 ).alias("parent"),
             )
             .withColumn("changed", F.col("parent") != F.col("prev"))
+            .localCheckpoint(eager=True)
         )
-        pinned = bool(checkpoint_every) and (i + 1) % checkpoint_every == 0
-        if pinned:
-            new_parent = new_parent.localCheckpoint(eager=True)
-            # the new round's eager checkpoint cut every dependency on
-            # the previous round's pin — release its blocks now
-            # (round-18, VERDICT r17 #5: a 50-round run otherwise
-            # holds 50 generations of parent blocks until GC)
-            if prev_pin is not None:
-                prev_pin.unpersist()
-            prev_pin = new_parent
+        # the new round's eager checkpoint cut every dependency on the
+        # previous round's pin — free its blocks now, so a 50-round
+        # run holds one generation of parent blocks, not 50
+        release(pin)
+        pin = new_parent
         changed = new_parent.filter("changed").limit(1).count()
         parent = new_parent.select("id", "parent")
         if changed == 0:
@@ -117,10 +115,10 @@ def connected_components(
     # distinct srcs and every round preserves it, so the former
     # nodes⋈parent readout was an identity self-join costing one
     # shuffle join per invocation (round-17)
-    if pinned:
+    if pin is not None:
         # the returned frame reads only the final round's checkpoint —
-        # the symmetric edge pin has no remaining consumer (round-18)
-        sym.unpersist()
+        # the symmetric edge pin has no remaining consumer
+        release(sym)
     return parent.select("id", F.col("parent").alias("component"))
 
 
@@ -139,7 +137,7 @@ def pagerank(
         .distinct()
     )
     ranks = nodes.withColumn("rank", F.lit(1.0))
-    prev_pin = None
+    pin = None
     for i in range(iters):
         contrib = (
             edges.join(ranks, edges.src == ranks.id)
@@ -163,11 +161,10 @@ def pagerank(
         )
         if (i + 1) % 5 == 0:
             ranks = ranks.localCheckpoint(eager=True)
-            # this checkpoint cut every dependency on the previous pin
-            # (round-18: release between-generation blocks eagerly)
-            if prev_pin is not None:
-                prev_pin.unpersist()
-            prev_pin = ranks
+            # this checkpoint cut every dependency on the previous pin:
+            # free its blocks now
+            release(pin)
+            pin = ranks
     return ranks
 
 
@@ -264,8 +261,7 @@ def k_core(edges: DataFrame, k: int = 3, max_iter: int = 50) -> DataFrame:
         if low.isEmpty():
             # the returned readout depends only on deg's checkpoint —
             # the surviving edge pin has no remaining consumer
-            # (round-18, VERDICT r17 #5)
-            sym.unpersist()
+            release(sym)
             return deg.select(F.col("src").alias("id"), "degree")
         new_sym = (
             sym.join(low.select("src"), "src", "left_anti")
@@ -275,10 +271,9 @@ def k_core(edges: DataFrame, k: int = 3, max_iter: int = 50) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         # the peel's eager checkpoint cut every dependency on this
-        # round's edge pin and degree pin — release their blocks now
-        # (round-18: a 50-round peel otherwise holds 50 generations)
-        sym.unpersist()
-        deg.unpersist()
+        # round's edge pin and degree pin — free their blocks now, so a
+        # 50-round peel holds one generation, not 50
+        release(sym, deg)
         sym = new_sym
     raise RuntimeError(f"k_core did not converge in {max_iter} iterations")
 
@@ -332,9 +327,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     return labels
 
 
-def strongly_connected_components(
-    edges: DataFrame, doublings: int = 6, checkpoint: bool = True
-) -> DataFrame:
+def strongly_connected_components(edges: DataFrame, doublings: int = 6) -> DataFrame:
     """Exact strongly connected components over a DIRECTED edge list:
     (id, scc_id) with scc_id = min node id in the SCC.
 
@@ -373,9 +366,8 @@ def strongly_connected_components(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
@@ -390,16 +382,14 @@ def strongly_connected_components(
         a = reach.select(F.col("u"), F.col("w").alias("mid"))
         b = reach.select(F.col("u").alias("mid"), F.col("w"))
         reach = reach.unionByName(a.join(b, "mid").select("u", "w")).distinct()
-        if checkpoint:
-            # LAZY (round-18, the dag_longest_paths treatment): reach
-            # is referenced three times per doubling (itself + both
-            # join sides), so lineage must be cut — but there is no
-            # per-round driver decision here, so the cut needs no
-            # blocking job; the mutual-reachability readout
-            # materializes the chain (round-18 A/B: the timed scc
-            # entries serve STAGED labels so they are flat — the win
-            # lands in the cold staged-build, measured below)
-            reach = reach.localCheckpoint(eager=False)
+        # LAZY (round-18, the dag_longest_paths treatment): reach is
+        # referenced three times per doubling (itself + both join
+        # sides), so lineage must be cut — but there is no per-round
+        # driver decision here, so the cut needs no blocking job; the
+        # mutual-reachability readout materializes the chain (round-18
+        # A/B: the timed scc entries serve STAGED labels so they are
+        # flat — the win lands in the cold staged-build)
+        reach = reach.localCheckpoint(eager=False)
     fwd = reach
     bwd = reach.select(F.col("w").alias("u"), F.col("u").alias("w"))
     mutual = fwd.join(bwd, ["u", "w"])

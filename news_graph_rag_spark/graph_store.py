@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import publish
+from . import pins, publish
 from .localrel import local_rel
 from .schemas import EDGE_SCHEMAS, NATURAL_KEYS, NODE_SCHEMAS
 
@@ -161,6 +161,10 @@ class GraphStore:
         # (set by ingest_articles); released once the tables
         # materialize — see localized()
         self.pending_caches: list[DataFrame] = []
+        # localCheckpoint frames this store's tables (set by
+        # localized()) or results served from it (ppr_expand) read;
+        # freed by release_checkpoints()
+        self.checkpoints: list[DataFrame] = []
         # committed-files-plus-appends split per table (module doc)
         self._tails: dict[str, _Tail] = {}
 
@@ -513,56 +517,33 @@ class GraphStore:
         appends and is served as ``committed scan ∪ checkpointed
         appends`` — the committed parquet already holds the rest — and
         keeps its tail, so the next ``save_atomic`` still writes only
-        those rows.
+        those rows. The new store lists its checkpoint frames on
+        ``checkpoints`` for ``release_checkpoints``.
         """
-        ids = []
-
-        def pin(df: DataFrame) -> DataFrame:
-            df = df.localCheckpoint(eager=True)
-            # record EXACTLY this generation's block-manager RDD ids so
-            # a later caller can release them once superseded
-            # (DataFrame.unpersist does NOT free localCheckpoint blocks
-            # — they belong to the checkpointed RDD, not the plan
-            # cache). The id is read off the checkpoint's own
-            # LogicalRDD plan node, never off a served union (no
-            # LogicalRDD root) and never a global persistent-RDD diff,
-            # which under a concurrent cache on the shared session
-            # would capture (and later free) someone else's only copy
-            # of their data.
-            try:
-                ids.append(int(df._jdf.queryExecution().analyzed().rdd().id()))
-            except Exception:
-                pass  # non-LogicalRDD plan: nothing to release later
-            return df
-
         out = GraphStore(self.spark)
         for name, df in self.tables.items():
             tail = self._tail(name)
             if tail is None:
-                out.tables[name] = pin(df)
+                out.tables[name] = df.localCheckpoint(eager=True)
+                out.checkpoints.append(out.tables[name])
                 continue
             rows = _union(tail.appends)
-            appends = () if rows is None else (pin(rows),)
+            appends = () if rows is None else (rows.localCheckpoint(eager=True),)
+            out.checkpoints.extend(appends)
             table = _union((tail.base, *appends))
             out.tables[name] = table
             out._tails[name] = tail._replace(appends=appends, table=table)
-        out.checkpoint_rdd_ids = sorted(ids)
         for df in self.pending_caches:
             df.unpersist()
         self.pending_caches = []
         return out
 
     def release_checkpoints(self) -> None:
-        """Free this store's localCheckpoint blocks (recorded by
-        ``localized()``). Call ONLY when a newer generation has been
-        materialized — the blocks ARE this store's table data."""
-        jsc = self.spark.sparkContext._jsc.sc()
-        for rid in getattr(self, "checkpoint_rdd_ids", []):
-            try:
-                jsc.unpersistRDD(rid, False)
-            except Exception:
-                pass
-        self.checkpoint_rdd_ids = []
+        """Free this store's localCheckpoint blocks (``checkpoints``).
+        Call ONLY when a newer generation has been materialized — the
+        blocks ARE this store's table data."""
+        pins.release(*self.checkpoints)
+        self.checkpoints = []
 
     # -- access -----------------------------------------------------------
 

@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 
 from .. import publish
 from ..localrel import local_rel
+from ..pins import release
 
 INDEX_FORMAT_VERSION = "ivf-int8-v2"  # v2: one file per inverted list
 
@@ -2536,7 +2537,7 @@ def append_codes(
             os.path.join(pq, "codes.parquet")
         )
     finally:
-        pinned.unpersist()
+        release(pinned)
     return int(n)
 
 
@@ -2689,7 +2690,7 @@ def split_list(
             # ---- atomic publish (the retrain_pq discipline at index level)
             publish.replace(path, staging)
     finally:
-        rows.unpersist()  # release the list's checkpoint blocks
+        release(rows)
         _drop_caches(path)
     return new_cid
 
@@ -2854,7 +2855,7 @@ def merge_lists(
         finally:
             _drop_caches(path)
     finally:
-        rows.unpersist()
+        release(rows)
     return keep
 
 
@@ -2980,9 +2981,7 @@ def retrain_quantizer(
             )
             publish.replace(path, staging)
     finally:
-        live.unpersist()
-        if assigned is not None:
-            assigned.unpersist()
+        release(live, assigned)
         _drop_caches(path)
         _drop_caches(staging)
     return len(cents)

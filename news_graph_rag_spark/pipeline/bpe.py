@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pins import release
+
 # end-of-word sentinel: keeps "low" in "lowest" distinct from final
 # "low" (the standard BPE trick); chosen outside the split alphabet
 EOW = "</w>"
@@ -123,17 +125,8 @@ def train_bpe(
         "n",
     )
     syms = syms.localCheckpoint()  # cut the corpus out of the lineage
-
-    def _ckpt_rdd_id(df: DataFrame) -> int | None:
-        try:
-            return int(df._jdf.queryExecution().analyzed().rdd().id())
-        except Exception:
-            return None
-
-    spark = docs.sparkSession
-    live_ckpt = _ckpt_rdd_id(syms)
     merges: list[tuple[str, str]] = []
-    prev = syms
+    pin = prev = syms
     for round_no in range(num_merges):
         pairs = prev.mapInPandas(
             _pair_counts_kernel, "a string, b string, cnt bigint"
@@ -154,24 +147,14 @@ def train_bpe(
         )
         if (round_no + 1) % checkpoint_every == 0 and round_no + 1 < num_merges:
             nxt = nxt.localCheckpoint(eager=True)
-            # release the SUPERSEDED checkpoint generation now that the
-            # new one is materialized (the crawler/graph_algos
-            # discipline — otherwise every generation's blocks live
-            # until session end)
-            if live_ckpt is not None:
-                try:
-                    spark.sparkContext._jsc.sc().unpersistRDD(live_ckpt, False)
-                except Exception:
-                    pass
-            live_ckpt = _ckpt_rdd_id(nxt)
+            # the new generation is materialized: nothing lazy reads
+            # the superseded one anymore
+            release(pin)
+            pin = nxt
         prev = nxt
     # training is done and the merges are collected — nothing lazy
     # references the final checkpoint either
-    if live_ckpt is not None:
-        try:
-            spark.sparkContext._jsc.sc().unpersistRDD(live_ckpt, False)
-        except Exception:
-            pass
+    release(pin)
     return merges
 
 

@@ -1,20 +1,18 @@
 """Deduplication operators over any (id, text) DataFrame.
 
-Five families (all shuffle-lean, sized for 100 TB corpora):
 - exact: content-hash groupBy (shuffle carries a 32-byte hash + id)
-- MinHash + LSH: map-side signatures → band buckets → per-bucket pairs
-- SimHash: weighted bit votes → 32/64-bit fingerprints; near-dup =
-  small hamming distance
-- n-gram Jaccard: exact verification, only ever inside LSH buckets
+- n-word shingle arrays (map-side, no explode)
+- fuzzy self-join: levenshtein within symmetric-delete blocks
 - embedding cosine: see ``similarity`` module
 
-The oracle-checked catalog versions live in
-``queries.pipeline_queries``; these are the generic forms.
+MinHash-LSH (the Arrow kernel ``_minhash_kernel``) and SimHash
+(``dedup_simhash``) live in ``queries.pipeline_queries``, oracle-checked
+through the catalog.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -46,173 +44,6 @@ def shingle_array(text_col: F.Column, n: int = 3) -> F.Column:
             ),
         ),
     ).otherwise(F.array(text_col))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, seed, minhash): lexicographic min of salted md5 over the
-    shingle set. Pure map per (row, seed) — no shuffle."""
-    spark = df.sparkSession
-    seeds = spark.range(num_hashes).select(F.col("id").cast("int").alias("seed"))
-    shdocs = df.select(
-        F.col(id_col).alias("doc_id"),
-        shingle_array(F.col(text_col), shingle_n).alias("shs"),
-    )
-    return shdocs.crossJoin(F.broadcast(seeds)).select(
-        "doc_id",
-        "seed",
-        F.array_min(
-            F.transform(
-                F.col("shs"),
-                lambda s: F.md5(F.concat(s, F.lit("#"), F.col("seed").cast("string"))),
-            )
-        ).alias("minhash"),
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, band_rows: int = 2, max_bucket: int = 1000
-) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from banded signatures.
-
-    Pairs are emitted per bucket from the sorted member array — the
-    signature subtree is evaluated once and ``max_bucket`` caps the
-    quadratic blowup on adversarial buckets (dropped buckets are the
-    degenerate all-identical ones; handle those via exact dedup first).
-    """
-    bands = (
-        signatures.withColumn("band", (F.col("seed") / band_rows).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                        lambda s: s["minhash"],
-                    ),
-                    "|",
-                )
-            ).alias("band_hash")
-        )
-    )
-    buckets = (
-        bands.groupBy("band", "band_hash")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
-        .filter((F.size("members") >= 2) & (F.size("members") <= max_bucket))
-    )
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("members") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("members"), i + 2, F.size("members")),
-                lambda m: F.struct(
-                    F.element_at(F.col("members"), i + 1).alias("doc_a"),
-                    m.alias("doc_b"),
-                ),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-
-
-def simhash_fingerprints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32
-) -> DataFrame:
-    """(id, simhash): weighted bit votes over md5-derived token hashes."""
-    toks = (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    nhex = bits // 4
-    if bits <= 60:
-        h = F.conv(F.substring(F.md5(F.col("token")), 1, nhex), 16, 10).cast("bigint")
-    else:
-        # conv() returns the UNSIGNED decimal string; above Long.MAX the
-        # bigint cast would null ~half of all 64-bit hashes. Assemble
-        # from 32-bit halves instead: shiftleft wraps to two's
-        # complement, giving a valid signed 64-bit reinterpretation.
-        md5c = F.md5(F.col("token"))
-        hi = F.conv(F.substring(md5c, 1, nhex - 8), 16, 10).cast("bigint")
-        lo = F.conv(F.substring(md5c, nhex - 7, 8), 16, 10).cast("bigint")
-        h = F.shiftleft(hi, 32).bitwiseOR(lo)
-    bit_rows = toks.withColumn("h", h).select(
-        "doc_id", "w", "h", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
-    )
-    votes = bit_rows.groupBy("doc_id", "bit").agg(
-        F.sum(
-            F.when(F.expr("(shiftright(h, bit) & 1) = 1"), F.col("w")).otherwise(
-                -F.col("w")
-            )
-        ).alias("vote")
-    )
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("vote") > 0, F.expr("shiftleft(cast(1 as bigint), bit)"))
-            .otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("simhash")
-    )
-
-
-def hamming_near_dups(
-    fingerprints: DataFrame, max_distance: int = 3, bits: int = 32
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, with GUARANTEED
-    recall via rotated blockings.
-
-    The fingerprint is split into ``max_distance + 1`` bit-blocks and
-    the self-join runs once per block (pigeonhole: a pair with ≤
-    ``max_distance`` differing bits has at least one block with zero
-    differences, so every qualifying pair is found in some blocking).
-    Each blocking is an equi-join on a short key — bucketed, never
-    all-pairs — and the union dedups pairs found in several blockings.
-    """
-    n_blocks = max_distance + 1
-    block_bits = bits // n_blocks
-    per_block = []
-    for r in range(n_blocks):
-        shift = r * block_bits
-        # top block absorbs the remainder bits; mask after the
-        # (arithmetic) shift so the sign bit can't leak into the key
-        width = bits - shift if r == n_blocks - 1 else block_bits
-        mask = (1 << width) - 1
-        blocked = fingerprints.withColumn(
-            "block", F.expr(f"shiftright(simhash, {shift}) & {mask}")
-        )
-        a, b = blocked.alias("a"), blocked.alias("b")
-        per_block.append(
-            a.join(
-                b,
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .withColumn("hamming", F.expr("bit_count(a.simhash ^ b.simhash)"))
-            .filter(F.col("hamming") <= max_distance)
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                "hamming",
-            )
-        )
-    out = per_block[0]
-    for df in per_block[1:]:
-        out = out.unionByName(df)
-    return out.distinct()
 
 
 def edit_distance_join(

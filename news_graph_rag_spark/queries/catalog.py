@@ -228,9 +228,3 @@ def stage_parquet(src_path: str, kind: str, write_to) -> str:
             write_to(tmp)
             publish.publish_once(tmp, dest, "_SUCCESS")
     return dest
-
-
-def load_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all TESTDATA tables as temp views (for spark.sql paths)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

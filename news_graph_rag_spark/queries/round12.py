@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import release
 from .catalog import load, register, spread
 
 
@@ -177,9 +178,10 @@ def _split_counts(
     # pin the per-value histogram ONCE: totals and the cumsum both
     # derive from it, and it is distinct-values-sized. ``pins``
     # collects the pinned frame so multi-level callers can release
-    # its blocks once a downstream eager checkpoint (the level's best
-    # splits) has cut every dependency on it (round-16 advice: the
-    # per-level pins leaked block-manager storage per cold training).
+    # its blocks once a downstream collect (the level's best splits,
+    # _best_local) has cut every dependency on it (round-16 advice:
+    # the per-level pins leaked block-manager storage per cold
+    # training).
     g = m.groupBy("kf", "x").agg(
         F.sum("y").cast("bigint").alias("np"),
         (F.count(F.lit(1)) - F.sum("y")).cast("bigint").alias("nn"),
@@ -717,8 +719,7 @@ def tree_depth2_orders(spark: SparkSession, sf: str) -> DataFrame:
     # the root collect cut every dependency on level 0's pinned
     # histogram — release its blocks (level 1 stays lazy in the
     # returned plan, so ITS histogram pin must live)
-    for p in root_pins:
-        p.unpersist()
+    release(*root_pins)
     # partition by the root split: map-side CASE against the broadcast
     # 1-row root — leaf 1 = split-feature value <= thr, leaf 2 = above
     root_b = F.broadcast(

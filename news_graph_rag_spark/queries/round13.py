@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import release
 from .catalog import load, register, spread
 from .round12 import (
     _CHECKSUM_MOD,
@@ -135,9 +136,7 @@ def _best_local(best: DataFrame, pins: "list[DataFrame] | None" = None) -> DataF
         )
         for r in best.collect()
     ]
-    if pins:
-        for p in pins:
-            p.unpersist()
+    release(*(pins or ()))
     rel = local_rel(
         spark,
         flat,

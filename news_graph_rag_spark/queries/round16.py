@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .. import publish
 from ..localrel import local_rel
+from ..pins import release
 from .catalog import load, register, stage_parquet
 from .round13 import _PQ_KS, _PQ_M
 from .round14 import _ivfpq_batch_rerank_oracle, _ivfpq_incr_cte
@@ -948,8 +949,7 @@ def _gbt_train_r(
         # and nothing else — free its blocks now (round-16 advice:
         # the per-round pins leaked block-manager storage for the
         # session lifetime on every cold training)
-        if prev_cur is not None:
-            prev_cur.unpersist()
+        release(prev_cur)
         prev_cur = cur
         cell_cols.append(f"n{r}")
         if r < rounds - 1:
@@ -1007,13 +1007,9 @@ def _staged_gbt3h_model(spark: SparkSession, sf: str) -> str:
             open(os.path.join(tmp, "_SUCCESS"), "w").close()
         finally:
             # the staged parquet IS the model from here on — release
-            # every training pin (round-16 advice: ~9 checkpointed
-            # frames per cold build stayed in the block manager for
-            # the life of the session)
-            for levels in splits_all:
-                for lv in levels:
-                    lv.unpersist()
-            final.unpersist()
+            # the last round's pin (the per-level splits are
+            # driver-literal relations and hold no blocks)
+            release(final)
 
     return stage_parquet(
         os.path.join(sf, "orders.parquet"),

@@ -40,10 +40,12 @@ def _pin(parted: DataFrame, pin: bool) -> DataFrame:
     ``pin=False`` exists for plan inspection only (tests assert the
     RangeExchange shape, which the checkpoint would otherwise hide).
 
-    Retention tradeoff: the checkpointed blocks stay in block-manager
-    storage until the DataFrame is garbage-collected (no explicit
-    unpersist hook — the helpers return derived frames, so the right
-    release point is unknowable here). Note localCheckpoint is a
+    Retention tradeoff: these pins are the one documented exception to
+    ``pins.release``. The helpers return frames DERIVED from the pin,
+    so no caller holds the checkpoint frame itself and the blocks stay
+    in block-manager storage until the ContextCleaner collects the
+    checkpointed RDD (ROADMAP direction 6 removes the range helpers
+    and this pin with them). Note localCheckpoint is a
     NON-RELIABLE checkpoint: it truncates lineage, so a lost block
     (executor loss, dynamic-allocation decommission, eviction under
     memory pressure) fails every derived DataFrame with a
@@ -223,8 +225,10 @@ def grouped_cumsums(
     pyramid to ONE bucket level, and — the measured point — shrinks
     the logical plan the optimizer has to chew per level pass (the
     3-level pyramid cost ~0.65s of pure driver planning per level at
-    bench scale). The 2^shift-row window bound is UNCHANGED; declare
-    bits honestly or the top window grows past it.
+    bench scale). The 2^shift-row window bound is UNCHANGED: a value
+    outside the signed domain [-2^(order_bits-1), 2^(order_bits-1))
+    fails the query (``raise_error`` in the bucketing projection)
+    rather than silently growing the top window past it.
 
     ``totals`` (round-17): optional {total_name: value_name} — also
     return per-group TOTALS of the named value columns, computed from
@@ -243,7 +247,19 @@ def grouped_cumsums(
     cur = df
     for i, (_, col) in enumerate(vals):
         cur = cur.withColumn(f"_gcv{i}", col.cast("long"))
-    cur = cur.withColumn("_gb1", F.shiftright(x, shift))
+    b1 = F.shiftright(x, shift)
+    if order_bits < 64:
+        # checked in the bucketing projection itself: no extra job
+        b1 = F.when(
+            ~F.shiftright(x.cast("long"), order_bits - 1).isin(0, -1),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"grouped_cumsums: {order_col} outside order_bits={order_bits}: "),
+                    x.cast("string"),
+                )
+            ),
+        ).otherwise(b1)
+    cur = cur.withColumn("_gb1", b1)
     w0 = (
         Window.partitionBy(*group_cols, "_gb1")
         .orderBy(order_col)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..localrel import local_rel
+from ..pins import release
 
 from ..graph_store import GraphStore
 from .fulltext import LUCENE_SPECIAL
@@ -286,15 +287,15 @@ def ppr_expand(
     checkpoint-per-round trades one extra edge-list pass per round
     (the ReusedExchange across rounds is lost) for a measured frontier.
 
-    Checkpoint hygiene: superseded round checkpoints are unpersisted as
+    Checkpoint hygiene: superseded round checkpoints are released as
     soon as the next round materializes. With ``finalize=True`` (the
     default) the k-row result is itself checkpointed and the remaining
     seed/round blocks are freed immediately — repeated serving calls
-    pin only k rows each, and even those ids are registered on
-    ``store.checkpoint_rdd_ids`` for ``GraphStore.release_checkpoints``.
+    pin only k rows each, and even that frame is handed to
+    ``store.checkpoints`` for ``GraphStore.release_checkpoints``.
     ``finalize=False`` returns the full lazy join plan (for ``explain``
-    / plan tests) and leaves the blocks registered on the store for the
-    caller to release.
+    / plan tests) and hands the seed and round checkpoints to the store
+    instead.
 
     Determinism (round 9): per-edge contributions and teleport mass are
     cast to DECIMAL(30,12) before the per-node SUM, so rank totals are
@@ -331,22 +332,15 @@ def ppr_expand(
         (F.lit(1.0 - alpha) * F.col("w")).cast("decimal(30,12)").alias("v"),
     )
     ranks = seeds.select("id", F.col("w").alias("rank"))
-    jsc = store.spark.sparkContext._jsc.sc()
-    prev_ckpt_rdd_id = None
+    pin = None
     for i in range(iters):
         if i > 0:
             # materialize the round's frontier so (a) its size can be
             # measured for the broadcast decision and (b) later rounds
             # never recompute earlier ones
             ranks = ranks.localCheckpoint(eager=True)
-            if prev_ckpt_rdd_id is not None:
-                try:  # the new checkpoint supersedes the previous round's
-                    jsc.unpersistRDD(prev_ckpt_rdd_id, False)
-                except Exception:
-                    pass
-            prev_ckpt_rdd_id = (
-                ranks._jdf.queryExecution().analyzed().rdd().id()
-            )
+            release(pin)  # the new checkpoint supersedes the previous round's
+            pin = ranks
         # round 0's frontier is the seed table (k rows, checkpointed);
         # later rounds count the checkpointed frontier — a metadata-cheap
         # job — and drop the broadcast hint once it could be hub-sized
@@ -379,36 +373,14 @@ def ppr_expand(
     )
     if not finalize:
         # plan-inspection hook: keep the full lazy join plan; the
-        # caller owns the checkpoint blocks, registered on the store
-        # for GraphStore.release_checkpoints
-        ids = getattr(store, "checkpoint_rdd_ids", [])
-        ids.extend(
-            x
-            for x in (
-                seeds._jdf.queryExecution().analyzed().rdd().id(),
-                prev_ckpt_rdd_id,
-            )
-            if x is not None
-        )
-        store.checkpoint_rdd_ids = ids
+        # store owns the checkpoints it reads
+        store.checkpoints.extend(f for f in (seeds, pin) if f is not None)
         return out
-    # checkpoint-release discipline (round-10 review; the localCheckpoint
-    # cliff in GraphStore.release_checkpoints): materialize the k-row
-    # result NOW, then free the seed and round checkpoints — otherwise
-    # every call pins a frontier-sized block until the session dies.
-    # Only the k-row result block stays pinned, registered on the store
-    # so release_checkpoints() can reclaim even that.
+    # materialize the k-row result NOW, then free the seed and round
+    # checkpoints — otherwise every call pins a frontier-sized block
+    # until the session dies. Only the k-row result stays pinned,
+    # handed to the store so release_checkpoints() frees even that.
     final = out.localCheckpoint(eager=True)
-    for rdd_id in (
-        seeds._jdf.queryExecution().analyzed().rdd().id(),
-        prev_ckpt_rdd_id,
-    ):
-        if rdd_id is not None:
-            try:
-                jsc.unpersistRDD(rdd_id, False)
-            except Exception:
-                pass
-    ids = getattr(store, "checkpoint_rdd_ids", [])
-    ids.append(final._jdf.queryExecution().analyzed().rdd().id())
-    store.checkpoint_rdd_ids = ids
+    release(seeds, pin)
+    store.checkpoints.append(final)
     return final

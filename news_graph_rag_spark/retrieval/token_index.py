@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from .. import publish
 from ..localrel import local_rel
+from ..pins import release
 
 TOKIDX_FORMAT_VERSION = "tokidx-life-v1"
 DEFAULT_BUCKETS = 16  # == retrieval_queries._TOK_BUCKETS
@@ -128,7 +129,7 @@ def append_postings(spark: SparkSession, path: str, docs: DataFrame) -> int:
             os.path.join(path, "postings.parquet")
         )
     finally:
-        rows.unpersist()
+        release(rows)
     return int(n)
 
 

@@ -16,14 +16,10 @@ from news_graph_rag_spark.pipeline import (
     ivf_search,
     language_id,
     lsh_bucket_top_k,
-    lsh_candidate_pairs,
-    minhash_signatures,
     quality_signals,
     sample_video_frames,
-    simhash_fingerprints,
     token_counts,
 )
-from news_graph_rag_spark.pipeline.dedup import hamming_near_dups
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
 NEAR = BASE.replace("today", "tonight")  # 1-token change → high Jaccard
@@ -47,52 +43,6 @@ def test_exact_dedup(docs):
     out = {r["canonical_id"]: r["n_copies"] for r in exact_dedup_keys(docs).collect()}
     assert out[0] == 2  # docs 0+1 collapse
     assert sum(out.values()) == 6
-
-
-def test_minhash_lsh_finds_exact_and_near_dups(docs):
-    sigs = minhash_signatures(docs, num_hashes=8)
-    assert sigs.count() == 6 * 8
-    pairs = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sigs).collect()}
-    assert (0, 1) in pairs  # identical docs always collide
-    assert (0, 2) in pairs or (1, 2) in pairs  # near-dup usually collides
-    assert all(a < b for a, b in pairs)
-
-
-def test_simhash_hamming(docs):
-    fps = simhash_fingerprints(docs)
-    vals = {r["doc_id"]: r["simhash"] for r in fps.collect()}
-    assert vals[0] == vals[1]  # identical text → identical fingerprint
-    near = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in
-            hamming_near_dups(fps, max_distance=8).collect()}
-    assert near.get((0, 1)) == 0
-
-
-def test_simhash_64bit_no_nulls(docs):
-    fps = simhash_fingerprints(docs, bits=64)
-    rows = fps.collect()
-    assert len(rows) == 6
-    assert all(r["simhash"] is not None for r in rows)
-    # signedness check: with 64 valid bits, some corpora hit the sign
-    # bit; identical docs must still agree exactly
-    vals = {r["doc_id"]: r["simhash"] for r in rows}
-    assert vals[0] == vals[1]
-
-
-def test_hamming_rotated_blocking_recall(spark):
-    """A near-dup pair whose differing bits all fall in the HIGH block
-    must still be found (regression: single low-16-bit prefix blocking
-    missed any pair differing only above bit 15)."""
-    base = 0b1010_1100_0011_0101_1001_0110_1100_0011
-    high_flip = base ^ (1 << 20) ^ (1 << 27)  # 2 differing bits, both high
-    far = base ^ 0x0F0F0F0F  # 16 differing bits
-    fps = spark.createDataFrame(
-        [(0, base), (1, high_flip), (2, far)], "doc_id long, simhash long"
-    )
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in hamming_near_dups(fps, max_distance=3).collect()
-    }
-    assert pairs == {(0, 1): 2}
 
 
 def test_vector_zero_norm_not_ranked_first(spark):

@@ -235,3 +235,23 @@ def test_grouped_cumsums_order_bits_and_totals(spark):
         .collect()
     }
     assert {r["g"]: (r["ta"], r["tb"]) for r in tot.collect()} == exp_tot
+
+
+def test_grouped_cumsums_order_bits_is_enforced(spark):
+    """A declared order domain is a contract: a value >= 2^31 under
+    order_bits=32 fails the query instead of widening the top window;
+    the domain's signed edges pass."""
+    import pytest
+
+    from news_graph_rag_spark.ranks import grouped_cumsums
+
+    def run(xs):
+        df = spark.createDataFrame(
+            [(0, x, 1) for x in xs], "g long, x long, a long"
+        )
+        out = grouped_cumsums(df, ["g"], "x", {"c": F.col("a")}, order_bits=32)
+        return sorted(r["c"] for r in out.collect())
+
+    assert run([-(2**31), 0, 2**31 - 1]) == [1, 2, 3]
+    with pytest.raises(Exception, match="outside order_bits=32: 2147483648"):
+        run([0, 2**31])
